@@ -839,8 +839,9 @@ def q_politeness_window(spark, sf_dir):
 
 
 def q_robots_filter(spark, sf_dir):
-    """robots.txt disallow-prefix filtering exactly as the frontier
-    engine's _apply_robots: broadcast rules join + EXISTS(prefix) drop."""
+    """robots.txt disallow-prefix filtering: broadcast rules join +
+    EXISTS(prefix) drop. (The frontier engine itself takes only the
+    compiled RFC 9309 rules — see q_robots_rfc.)"""
     docs = _documents(spark, sf_dir)
     rules = spark.createDataFrame(
         [(f"host{h}", ["/d/1", "/d/3"]) for h in range(0, 10, 3)],

@@ -2,12 +2,22 @@
 
 Per round (SURVEY §3.1 lifecycle):
 
-    frontier → [canonical ids] → dedup (Bloom prefilter + exact anti-join)
-             → politeness window (per-host slots via ranking window)
+    frontier → admission stages → localCheckpoint → admitted / deferred
              → join pages corpus on url_hash (broadcast when small, AQE else)
              → extraction UDF (mapInPandas, page-scope chain execution)
              → records / child values / open records / next frontier
              → atomic round commit (TableIO) + metrics
+
+Admission is one ordered list of named ``DataFrame → DataFrame`` stages,
+built once in ``__init__`` from what the engine was given (a stage whose
+input is absent is simply not in the list) and folded over every round:
+
+    redirects → unseen → winner → robots → rank
+
+Seeds and every round's discovered links pass through one URL-prep list
+before they enter the frontier:
+
+    dust → alias → predicate → rehash
 
 Two execution modes:
 
@@ -28,6 +38,9 @@ from __future__ import annotations
 
 import json
 import logging
+import resource
+import time
+from functools import reduce
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
@@ -41,11 +54,10 @@ from ..extract import (
 )
 from ..record import merge_value
 from ..spec import Chain, collect_chains
-from ..urlnorm import xxhash64_py
+from ..urlnorm import canonicalize, host_expr, strip_params_expr, url_host
 from . import bloom as bloom_mod
 from . import cuckoo as cuckoo_mod
-from .politeness import (DEFAULT_CONCURRENCY, DEFAULT_ROUND_SECONDS,
-                         host_slots)
+from .politeness import DEFAULT_CONCURRENCY, DEFAULT_ROUND_SECONDS
 
 FRONTIER_SCHEMA = StructType([
     StructField("url", StringType()),
@@ -73,6 +85,12 @@ _FRONTIER_COLS = [f.name for f in FRONTIER_SCHEMA.fields]
 
 # executor-resident URL-seen state: one row per host bucket
 _STATE_SCHEMA = "bucket int, bitset binary, hashes binary"
+
+# auto URL-seen: the seen-key set is broadcast to the anti-join while it
+# holds at most this many keys, shuffled beyond
+SEEN_BROADCAST_KEYS = 4_000_000
+# bloom URL-seen: bits per host-bucket bitset
+BLOOM_BITS_PER_BUCKET = 1 << 20
 
 
 def _checkpoint_truncated(df: DataFrame) -> DataFrame:
@@ -107,6 +125,30 @@ def _checkpoint_truncated(df: DataFrame) -> DataFrame:
         return cp
 
 
+def _frontier_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
+    norm = [{c: r.get(c) for c in _FRONTIER_COLS} for r in rows]
+    return spark.createDataFrame(norm, schema=FRONTIER_SCHEMA)
+
+
+def seed_frontier(spark: SparkSession, urls: list[str]) -> DataFrame:
+    """Depth-0 frontier rows for an explicit URL list (``sort_index`` =
+    list position), in ``FRONTIER_SCHEMA``. URLs are canonicalized on the
+    driver; ``url_hash`` is computed JVM-side (``F.xxhash64`` ==
+    ``urlnorm.xxhash64_py``, seed 42)."""
+    rows = []
+    for i, u in enumerate(urls):
+        cu = canonicalize(u)
+        rows.append({"url": cu, "host": url_host(cu), "depth": 0,
+                     "sort_index": i, "kind": "crawl", "method": "get"})
+    return (_frontier_df(spark, rows)
+            .withColumn("url_hash", F.xxhash64("url")))
+
+
+def _fold(stages: list, df: DataFrame) -> DataFrame:
+    """Apply an ordered list of named ``DataFrame → DataFrame`` stages."""
+    return reduce(lambda acc, stage: stage[1](acc), stages, df)
+
+
 class FrontierEngine:
     def __init__(
         self,
@@ -120,14 +162,9 @@ class FrontierEngine:
         dedup: bool = False,
         politeness_salt_buckets: int = 0,
         seen_mode: str = "auto",
-        seen_broadcast_keys: int = 4_000_000,
         bloom_buckets: int = 32,
-        bloom_bits_per_bucket: int = 1 << 20,
         broadcast_threshold: int = 100_000,
         round_seconds: float = DEFAULT_ROUND_SECONDS,
-        adaptive_shuffle: bool = True,
-        dedup_via: str = "window",
-        follow_redirects: bool = True,
         max_redirects: int = 5,
         priority_df: DataFrame | None = None,
         host_budget_df: DataFrame | None = None,
@@ -176,7 +213,6 @@ class FrontierEngine:
         self.state = state
         self.concurrency = concurrency
         self.politeness = politeness
-        self.robots_df = robots_df
         self.dedup = dedup
         self.politeness_salt_buckets = politeness_salt_buckets
         if seen_mode not in ("auto", "bloom", "cuckoo"):
@@ -188,23 +224,10 @@ class FrontierEngine:
         # in the per-bucket filter blob (Bloom bitset vs cuckoo
         # fingerprint table — frontier/bloom.py vs frontier/cuckoo.py)
         self._prob_seen = seen_mode in ("bloom", "cuckoo")
-        self.seen_broadcast_keys = seen_broadcast_keys
         self.bloom_buckets = bloom_buckets
-        self.bloom_bits = bloom_bits_per_bucket
         self.broadcast_threshold = broadcast_threshold
         self.round_seconds = round_seconds
-        # iterative loops pay fixed task-launch latency per shuffle stage;
-        # a 10k-row late-crawl round does not need 64 reduce tasks × 3
-        # admission shuffles. With AQE off (bench default) the engine
-        # right-sizes spark.sql.shuffle.partitions per round from the
-        # previous round's frontier size (the same job AQE would do at
-        # runtime — re-enable AQE at true cluster scale instead).
-        self.adaptive_shuffle = adaptive_shuffle
-        # within-round winner selection: 'window' (row_number) or 'agg'
-        # (groupBy + min_by on an order-key struct — map-side partial
-        # combine, no sort; see _dedup_round)
-        self.dedup_via = dedup_via
-        self.metrics_rows: list[dict] = []
+        self._metrics: DataFrame | None = None  # stateless runs' metrics
         self._pending_metrics: list[DataFrame] = []
         # URL-seen state, partitioned by host bucket (north rule). Two
         # structures per bucket: a Bloom bitset (cheap prefilter, the
@@ -220,7 +243,7 @@ class FrontierEngine:
         self._seen_state: DataFrame | None = None
         # auto mode: the seen set is a list of per-round persisted key
         # DataFrames (url_hash); dedup = JVM broadcast LEFT ANTI while the
-        # set fits `seen_broadcast_keys`, shuffle anti-join (AQE) beyond.
+        # set fits SEEN_BROADCAST_KEYS, shuffle anti-join (AQE) beyond.
         # Deltas are never re-stored — each round persists only its own
         # keys; parts compact every ``seen_compact_parts`` rounds so deep
         # crawls never accumulate unbounded union lineage.
@@ -235,15 +258,24 @@ class FrontierEngine:
         self.on_round_end = None
         self._total_admitted = 0
         self._total_rounds = 0
+        # the round being admitted (stages tag their metric rows with it)
+        self._round = 0
+        # robots: compile_robots output — (host, rules, crawl_delay)
+        if robots_df is not None and "rules" not in robots_df.columns:
+            raise ValueError(
+                "robots_df needs a 'rules' column (politeness."
+                "compile_robots output); got columns "
+                f"{robots_df.columns}")
+        self.robots_df = robots_df
         # distributed redirect resolution (reference follow-limit
         # semantics): when the pages table carries a ``redirect_to``
         # column, frontier urls landing on a 3xx source resolve to the
         # final target via ONE join per round against a precomputed hop
         # closure over the (tiny) redirect edge set — see
-        # frontier/redirects.py. Built lazily on first run_crawl round.
+        # frontier/redirects.py. Built lazily on first run_crawl round;
+        # drop the column to crawl redirect sources as plain pages.
         self._redirect_src = (
-            pages_df if follow_redirects
-            and "redirect_to" in pages_df.columns else None)
+            pages_df if "redirect_to" in pages_df.columns else None)
         self._redirect_closure_df: DataFrame | None = None
         self._redirects_small = False
         self.max_redirects = max_redirects
@@ -261,28 +293,11 @@ class FrontierEngine:
                                F.col("priority").cast("bigint")
                                .alias("priority"))
             if priority_df is not None else None)
-        # optional per-host fetch-slot budgets (host, slots) — e.g.
-        # reputation.allocate_budget output. A budget CAPS the host's
-        # politeness slots for every round (least with the crawl-delay
-        # slots); slots=0 starves a host without dropping its frontier
-        # rows (they defer like any over-slot row). Hosts absent from
-        # the table keep the default. Hosts-sized → broadcast join.
-        self.host_budget_df = (
-            host_budget_df.select("host",
-                                  F.col("slots").cast("int")
-                                  .alias("_budget"))
-            if host_budget_df is not None else None)
-        # optional per-host adaptive delays (host, delay_ms) — e.g.
-        # politeness.adaptive_delay output (p95-latency feedback).
-        # Converted to a per-round slot cap exactly like a robots
-        # crawl-delay (round_seconds·1000 div delay_ms, floor 1) and
-        # least-combined with whatever slots the host already has.
-        # Hosts absent keep the default. Hosts-sized → broadcast join.
-        self.host_delay_df = (
-            host_delay_df.select("host",
-                                 F.col("delay_ms").cast("bigint")
-                                 .alias("_delay_ms"))
-            if host_delay_df is not None else None)
+        # per-host fetch-slot caps (robots Crawl-delay, budgets, adaptive
+        # delays) as ONE hosts-sized (host, _slots) frame; see _host_slots
+        self._slots = (self._host_slots(robots_df, host_budget_df,
+                                        host_delay_df)
+                       if politeness else None)
         # optional per-host query-param strip rules (host, param) —
         # e.g. urlnorm.dust_rules output. Applied map-only to seeds and
         # every round's discovered links BEFORE url_hash / URL-seen /
@@ -302,10 +317,9 @@ class FrontierEngine:
         # optional exact URL→canonical alias map (url, canonical_url) —
         # e.g. functions.metadata page_metadata/canonical_collapse
         # output (the rel=canonical tier of the dedup chain; DUST
-        # handles the syntactic tier above). Keyed by xxhash64(url) and
-        # applied to seeds and every round's discovered links AFTER the
-        # DUST strip and BEFORE URL-seen, so alias URLs collapse onto
-        # their canonical fetch key and never consume state or slots.
+        # handles the syntactic tier above). Rows are (url, _canon,
+        # _akey = xxhash64(url)); the join keys on _akey AND url, so a
+        # 64-bit hash collision can never rewrite an unrelated URL.
         # Unlike the hosts-sized frames this table scales with the
         # corpus: the join is left UNHINTED so Catalyst/AQE picks
         # broadcast vs shuffle from stats — at 10^10 URLs, store it
@@ -320,19 +334,38 @@ class FrontierEngine:
                 url_alias_df
                 .filter(F.col("canonical_url").isNotNull()
                         & (F.col("canonical_url") != F.col("url")))
-                .select(F.xxhash64("url").alias("_akey"),
-                        F.col("canonical_url"))
-                .groupBy("_akey")
-                .agg(F.min("canonical_url").alias("_canon")))
+                .groupBy("url")
+                .agg(F.min("canonical_url").alias("_canon"))
+                .withColumn("_akey", F.xxhash64("url")))
         else:
             self._aliases = None
         # optional pre-fetch URL filter: a SQL boolean over column
         # ``url`` (e.g. urlnorm.default_url_predicate() — skip asset
-        # extensions / session-id URLs). Applied to seeds and to every
-        # round's DISCOVERED links before they enter the frontier, so
-        # filtered URLs never consume seen-state, fetch slots, or
-        # frontier checkpoints. Map-only expression, zero extra jobs.
+        # extensions / session-id URLs), so filtered URLs never consume
+        # seen-state, fetch slots, or frontier checkpoints. Map-only
+        # expression, zero extra jobs.
         self.url_predicate = url_predicate
+
+        def present(*stages):
+            return [(name, fn) for name, fn, on in stages if on]
+
+        # URL prep, applied to seeds and to every round's discovered links
+        # before they enter the frontier
+        self._url_prep = present(
+            ("dust", self._strip_params, self._rewrites is not None),
+            ("alias", self._apply_aliases, self._aliases is not None),
+            ("predicate", self._filter_predicate,
+             url_predicate is not None),
+            ("rehash", _rehash, True))
+        # per-round admission, folded over the frontier before the round's
+        # one admission checkpoint
+        self._admission = present(
+            ("redirects", self._resolve_redirects,
+             self._redirect_src is not None),
+            ("unseen", self._drop_seen, dedup),
+            ("winner", self._dedup_round, dedup),
+            ("robots", self._apply_robots, robots_df is not None),
+            ("rank", self._rank_politeness, politeness))
 
     def pause(self) -> None:
         """Request a pause at the next round boundary (resume via
@@ -344,85 +377,273 @@ class FrontierEngine:
         index.js Osmosis.resources: stack/requests/RAM) — driver RSS plus
         cumulative crawl counters; per-round RSS also lands in
         ``visit_meta`` so long crawls expose a leak trend."""
-        import resource as _res
-        rss_mb = _res.getrusage(_res.RUSAGE_SELF).ru_maxrss / 1024.0
         return (f"requests: {self._total_admitted}, "
                 f"rounds: {self._total_rounds}, "
-                f"RAM: {rss_mb:.1f}MB (driver peak)")
+                f"RAM: {_rss_mb():.1f}MB (driver peak)")
 
     # ------------------------------------------------------------------
-    # shared round machinery
+    # URL prep stages: dust → alias → predicate → rehash
     # ------------------------------------------------------------------
 
-    def _frontier_df(self, rows: list[dict]) -> DataFrame:
-        norm = [{c: r.get(c) for c in _FRONTIER_COLS} for r in rows]
-        return self.spark.createDataFrame(norm, schema=FRONTIER_SCHEMA)
+    def _strip_params(self, frontier: DataFrame) -> DataFrame:
+        """dust: per-host DUST param-strip rules (url_rewrites_df) — a
+        map-only broadcast join + array filter. Rule-less rows pass
+        through byte-identical. Frontier URLs are canonicalize()d
+        (fragment already stripped); the shared expression preserves
+        fragments on raw inputs too."""
+        return (frontier
+                .join(F.broadcast(self._rewrites), "host", "left")
+                .withColumn("url", strip_params_expr(F.col("url"),
+                                                     F.col("_strip")))
+                .drop("_strip"))
 
-    def _dedup_round(self, frontier: DataFrame):
-        """URL-seen dedup in ONE shuffle + ONE vectorized Python pass:
+    def _apply_aliases(self, frontier: DataFrame) -> DataFrame:
+        """alias: the exact URL→canonical map (url_alias_df), an
+        equi-join on (xxhash64(url), url) with url / host rebuilt for
+        matched rows (a rel=canonical target may live on a different
+        host, so politeness keys must follow). The key is a FRESH hash of
+        the (possibly DUST-stripped) url — discovered links reach here
+        before their url_hash is computed. Alias-less rows pass through
+        byte-identical."""
+        return (frontier
+                .withColumn("_akey", F.xxhash64("url"))
+                .join(self._aliases, ["_akey", "url"], "left")
+                .withColumn("url", F.coalesce(F.col("_canon"),
+                                              F.col("url")))
+                .withColumn("host",
+                            F.when(F.col("_canon").isNotNull(),
+                                   host_expr(F.col("url")))
+                            .otherwise(F.col("host")))
+                .drop("_canon", "_akey"))
 
-        - within-round repeats collapse to the DETERMINISTIC winner — the
-          highest-priority row by the admission order (depth DESC,
-          sort_index ASC, referer ASC); a bare dropDuplicates would keep an
-          arbitrary row, making visit order differ between a resumed and a
-          one-shot crawl (the only shuffle);
-        - cross-round seen filtering has two backends:
-          * ``auto`` (default): JVM-side LEFT ANTI join against the union of
-            per-round persisted key DataFrames — broadcast (one hashed
-            relation per executor, built JVM-side, no Python involved) while
-            the seen set fits ``seen_broadcast_keys``, shuffle anti-join that
-            AQE can skew-split beyond. The anti-join runs BEFORE the window
-            so already-seen rows never enter the shuffle.
-          * ``bloom``: the partitioned Bloom + exact-array probe — the
-            frontier cogroups with the EXECUTOR-RESIDENT state table on the
-            host bucket (``cogroup(...).applyInPandas``), so each bucket's
-            blobs meet its frontier rows co-partitioned, once, with no
-            driver round-trip and no per-row blob duplication (a plain join
-            would copy the bucket blob onto every frontier row).
-            Bloom-NEGATIVE rows are *definitely new*; Bloom-POSITIVE rows
-            are verified against the bucket's exact sorted hash array
-            (``searchsorted``), the backstop that keeps the visit set exact
-            despite Bloom false positives.
+    def _filter_predicate(self, frontier: DataFrame) -> DataFrame:
+        """predicate: keep rows passing the ``url_predicate`` SQL."""
+        return frontier.filter(F.expr(self.url_predicate))
+
+    # ------------------------------------------------------------------
+    # admission stages: redirects → unseen → winner → robots → rank
+    # ------------------------------------------------------------------
+
+    def _redirects(self) -> DataFrame:
+        """Lazily built redirect hop-closure (frontier/redirects.py); the
+        build cost is O(redirect rows), paid once per engine."""
+        if self._redirect_closure_df is None:
+            from .redirects import redirect_closure
+            self._redirect_closure_df = redirect_closure(
+                self._redirect_src, self.max_redirects)
+            n = self._redirect_closure_df.count()
+            self._redirects_small = n <= self.broadcast_threshold
+        return self._redirect_closure_df
+
+    def _resolve_redirects(self, frontier: DataFrame) -> DataFrame:
+        """redirects: rewrite frontier rows that point at a redirect
+        source to their FINAL url (referer := the redirecting url, per the
+        reference's final-hop referer); rows whose chain exhausts the
+        ``follow`` limit (loops included) drop with an error metric — the
+        distributed form of needle's "Max redirects reached. Possible
+        loop in: <url>". Runs BEFORE URL-seen dedup, so the seen set keys
+        final urls and a target reached via two different sources
+        fetches exactly once."""
+        cc = self._redirects().select(
+            F.col("url_hash").alias("_r_key"),
+            F.col("final_url").alias("_r_final"),
+            F.col("final_hash").alias("_r_fhash"),
+            F.col("final_host").alias("_r_fhost"),
+            F.col("ok").alias("_r_ok"))
+        if self._redirects_small:
+            cc = F.broadcast(cc)
+        joined = frontier.join(cc, frontier["url_hash"] == cc["_r_key"],
+                               "left")
+        # max-redirects failures: counted per source host like fetch
+        # errors; lazy frame over checkpointed frontier blocks + the
+        # checkpointed closure, executed once in _flush_metrics
+        self._pending_metrics.append(
+            joined.filter(F.col("_r_ok") == F.lit(False))
+            .groupBy("host")
+            .agg(F.count("*").alias("fetched"),
+                 F.lit(0).cast("long").alias("parsed"),
+                 F.count("*").alias("errors"))
+            .withColumn("round", F.lit(self._round)))
+        return (joined
+                .filter(F.col("_r_key").isNull() | F.col("_r_ok"))
+                .withColumn("referer",
+                            F.when(F.col("_r_key").isNotNull(),
+                                   F.col("url"))
+                            .otherwise(F.col("referer")))
+                .withColumn("url", F.coalesce("_r_final", "url"))
+                .withColumn("url_hash", F.coalesce("_r_fhash", "url_hash"))
+                .withColumn("host", F.coalesce("_r_fhost", "host"))
+                .select(*_FRONTIER_COLS))
+
+    def _drop_seen(self, frontier: DataFrame) -> DataFrame:
+        """unseen: cross-round URL-seen filtering, two backends:
+
+        - ``auto`` (default): JVM-side LEFT ANTI join against the union of
+          per-round persisted key DataFrames — broadcast (one hashed
+          relation per executor, built JVM-side, no Python involved) while
+          the seen set fits ``SEEN_BROADCAST_KEYS``, shuffle anti-join that
+          AQE can skew-split beyond. The anti-join runs BEFORE the winner
+          window so already-seen rows never enter its shuffle.
+        - ``bloom``/``cuckoo``: the partitioned filter + exact-array probe
+          — the frontier cogroups with the EXECUTOR-RESIDENT state table
+          on the host bucket (``cogroup(...).applyInPandas``), so each
+          bucket's blobs meet its frontier rows co-partitioned, once, with
+          no driver round-trip and no per-row blob duplication (a plain
+          join would copy the bucket blob onto every frontier row).
+          Filter-NEGATIVE rows are *definitely new*; filter-POSITIVE rows
+          are verified against the bucket's exact sorted hash array
+          (``searchsorted``), the backstop that keeps the visit set exact
+          despite false positives.
         """
-        if not self._prob_seen and self._seen_parts:
-            seen = self._seen_parts[0]
-            for p in self._seen_parts[1:]:
-                seen = seen.unionByName(p)
-            if self._seen_count <= self.seen_broadcast_keys:
-                seen = F.broadcast(seen)
-            frontier = frontier.join(seen, "url_hash", "left_anti")
-        if self._prob_seen and self._seen_state is not None:
-            frontier = self._probe_seen_state(frontier)
-        if self.dedup_via == "window":
-            w = Window.partitionBy("url_hash").orderBy(
-                F.col("depth").desc(),
-                F.col("sort_index").asc_nulls_last(),
-                F.col("referer").asc_nulls_first(),
-            )
-            return (frontier.withColumn("_rn", F.row_number().over(w))
-                    .filter(F.col("_rn") == 1).drop("_rn"))
-        # 'agg': same winner via groupBy + min_by on an order-key struct —
-        # hash aggregation with MAP-SIDE partial combine, so in-round
-        # duplicate links collapse before the shuffle and no per-partition
-        # sort runs (the window must sort every partition). Struct fields
-        # encode the window's exact order: depth DESC (negated),
-        # sort_index ASC NULLS LAST (coalesce to max), referer ASC NULLS
-        # FIRST (null-flag field then value); trailing full-row fields
-        # make the key a total order, so ties that the window breaks
-        # arbitrarily are deterministic here.
-        cols = frontier.columns
-        key = F.struct(
-            (-F.col("depth")).alias("_d"),
-            F.coalesce(F.col("sort_index"),
-                       F.lit(2**63 - 1)).alias("_s"),
-            F.col("referer").isNotNull().cast("int").alias("_rn"),
-            F.coalesce(F.col("referer"), F.lit("")).alias("_r"),
-            *[F.col(c).alias(f"_t{i}") for i, c in enumerate(cols)
-              if c not in ("depth", "sort_index", "referer", "url_hash")],
+        if self._prob_seen:
+            if self._seen_state is None:
+                return frontier
+            return self._probe_seen_state(frontier)
+        if not self._seen_parts:
+            return frontier
+        seen = reduce(DataFrame.unionByName, self._seen_parts)
+        if self._seen_count <= SEEN_BROADCAST_KEYS:
+            seen = F.broadcast(seen)
+        return frontier.join(seen, "url_hash", "left_anti")
+
+    def _dedup_round(self, frontier: DataFrame) -> DataFrame:
+        """winner: within-round repeats collapse to the DETERMINISTIC
+        winner — the highest-priority row by the admission order (depth
+        DESC, sort_index ASC, referer ASC) — in one shuffle. A bare
+        dropDuplicates would keep an arbitrary row, making visit order
+        differ between a resumed and a one-shot crawl."""
+        w = Window.partitionBy("url_hash").orderBy(
+            F.col("depth").desc(),
+            F.col("sort_index").asc_nulls_last(),
+            F.col("referer").asc_nulls_first(),
         )
-        return (frontier.groupBy("url_hash")
-                .agg(F.min_by(F.struct(*cols), key).alias("_w"))
-                .select("_w.*"))
+        return (frontier.withColumn("_rn", F.row_number().over(w))
+                .filter(F.col("_rn") == 1).drop("_rn"))
+
+    def _apply_robots(self, frontier: DataFrame) -> DataFrame:
+        """robots: drop robots-disallowed URLs (never fetched).
+
+        The robots table is ``compile_robots`` output (``rules`` column,
+        ``politeness.RULES_TYPE``): full RFC 9309 semantics — ``*``
+        wildcards, ``$`` anchors, longest-pattern-wins with Allow on ties
+        — evaluated ENTIRELY JVM-side: filter the rule array down to regex
+        matches, then ``array_max`` over (len, allow) structs is exactly
+        the RFC precedence (struct compare is field-ordered, so longer
+        patterns win and ``true > false`` breaks ties toward Allow). No
+        Python touches the frontier."""
+        path = F.parse_url(F.col("url"), F.lit("PATH"))
+        rules = F.broadcast(self.robots_df.select("host", "rules"))
+        joined = frontier.join(rules, "host", "left")
+        matched = F.filter(
+            F.coalesce(F.col("rules"), F.array()),
+            lambda r: F.regexp_like(path, r["rx"]))
+        verdict = F.array_max(F.transform(
+            matched,
+            lambda r: F.struct(r["len"].alias("l"),
+                               r["allow"].alias("a"))))
+        blocked = verdict.isNotNull() & ~verdict["a"]
+        return joined.filter(~blocked).drop("rules")
+
+    def _host_slots(self, robots_df: DataFrame | None,
+                    host_budget_df: DataFrame | None,
+                    host_delay_df: DataFrame | None) -> DataFrame | None:
+        """Per-host fetch-slot caps as ONE hosts-sized (host, _slots)
+        frame, checkpointed once and broadcast-joined once per round:
+
+            _slots = least(coalesce(robots_cap, concurrency), budget,
+                           delay_cap)
+
+        (``least`` skips NULLs; hosts absent from every table keep
+        ``concurrency``). ``robots_cap`` is round_seconds div the
+        Crawl-delay, ``delay_cap`` the same for an adaptive delay
+        (``host_delay_df`` (host, delay_ms), e.g. politeness.
+        adaptive_delay output) — both clamped to [1, concurrency·100].
+        ``host_budget_df`` (host, slots), e.g. reputation.allocate_budget
+        output, caps the host for every round; slots=0 starves it
+        without dropping its frontier rows (they defer like any
+        over-slot row). None when no table is given."""
+        def cap(window, delay):
+            # a non-positive or NULL delay sets no cap (as host_slots)
+            return F.when(delay > 0, F.greatest(F.lit(1), F.least(
+                F.lit(self.concurrency * 100),
+                (F.lit(window) / delay).cast("int"))))
+
+        parts = []
+        first = F.lit(self.concurrency)
+        if robots_df is not None:
+            parts.append(robots_df.select(
+                "host", cap(self.round_seconds, F.col("crawl_delay"))
+                .alias("_robots")))
+            first = F.coalesce(F.col("_robots"), first)
+        if host_budget_df is not None:
+            parts.append(host_budget_df.select(
+                "host", F.col("slots").cast("int").alias("_budget")))
+        if host_delay_df is not None:
+            parts.append(host_delay_df.select(
+                "host", cap(int(self.round_seconds * 1000),
+                            F.col("delay_ms").cast("bigint"))
+                .alias("_delay")))
+        if not parts:
+            return None
+        caps = reduce(lambda a, b: a.join(b, "host", "full"), parts)
+        rest = [F.col(c) for c in caps.columns if c in ("_budget", "_delay")]
+        slots = F.least(first, *rest) if rest else first
+        return _checkpoint_truncated(
+            caps.select("host", slots.alias("_slots")))
+
+    def _rank_politeness(self, frontier: DataFrame) -> DataFrame:
+        """rank: per-host fetch-slot ranking (SURVEY §2.6): adds
+        ``_rank``/``_slots`` columns (no filtering here — the caller
+        checkpoints the ranked frame ONCE and derives both admitted and
+        deferred from the same blocks, so the admission pipeline never
+        recomputes). Priority (depth DESC, sort_index ASC, url) =
+        DFS-with-limit."""
+        slots = F.lit(self.concurrency)
+        if self._slots is not None:
+            frontier = frontier.join(F.broadcast(self._slots), "host",
+                                     "left")
+            slots = F.coalesce(F.col("_slots"), slots)
+        frontier = frontier.withColumn("_slots", slots)
+        order = [F.col("depth").desc(),
+                 F.col("sort_index").asc_nulls_last(),
+                 F.col("url").asc()]
+        if self.priority_df is not None:
+            # score-ordered admission: scored URLs outrank unscored
+            # (NULL last), score breaks before the DFS keys. The join is
+            # a plain equi-join on url_hash — at scale both sides are
+            # url-keyed tables and AQE picks broadcast when the score
+            # table is small.
+            frontier = frontier.join(self.priority_df, "url_hash", "left")
+            order = [F.col("priority").desc_nulls_last(), *order]
+        S = self.politeness_salt_buckets
+        if S > 1:
+            # Two-phase admission against hot-host skew (SURVEY §7.3): a
+            # 10^9-row host would make the single per-host ranking window
+            # one straggler task. Phase 1 ranks within (host, salt) buckets
+            # — rows beyond `slots` in their bucket cannot be in the host's
+            # global top `slots`, so they defer without ever entering the
+            # per-host shuffle. Phase 2 ranks only the survivors
+            # (≤ hosts × S × slots rows — bounded however hot the host).
+            # The total order (…, url) is salt-invariant, so the admitted
+            # set is IDENTICAL to the single-window plan.
+            salt = F.pmod(F.coalesce(F.col("url_hash"), F.lit(0)),
+                          F.lit(S))
+            w1 = Window.partitionBy("host", salt).orderBy(*order)
+            b_ranked = frontier.withColumn(
+                "_brank", F.row_number().over(w1))
+            cand = b_ranked.filter(F.col("_brank") <= F.col("_slots"))
+            rest = b_ranked.filter(F.col("_brank") > F.col("_slots"))
+            w2 = Window.partitionBy("host").orderBy(*order)
+            cand = cand.withColumn("_rank", F.row_number().over(w2))
+            rest = rest.withColumn(
+                "_rank", F.col("_slots") + F.col("_brank"))
+            return cand.unionByName(rest).drop("_brank")
+        w = Window.partitionBy("host").orderBy(*order)
+        return frontier.withColumn("_rank", F.row_number().over(w))
+
+    # ------------------------------------------------------------------
+    # URL-seen state (read by the unseen stage, written after admission)
+    # ------------------------------------------------------------------
 
     def _probe_seen_state(self, frontier: DataFrame) -> DataFrame:
         """Filter already-seen rows against the partitioned state table.
@@ -503,12 +724,9 @@ class FrontierEngine:
                 # per round — linear lineage and one scan-leaf per round.
                 # One merged checkpoint every K rounds keeps the anti-join
                 # a single leaf; total recheckpoint cost is O(seen·R/K).
-                merged = self._seen_parts[0]
-                for p in self._seen_parts[1:]:
-                    merged = merged.unionByName(p)
-                self._seen_parts = [_checkpoint_truncated(merged)]
+                self._seen_parts = [_checkpoint_truncated(
+                    reduce(DataFrame.unionByName, self._seen_parts))]
             return
-        bits = self.bloom_bits
         mode = self.seen_mode
 
         def build_delta(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -517,7 +735,7 @@ class FrontierEngine:
             if mode == "cuckoo":
                 blob = cuckoo_mod.build(hashes).tobytes()
             else:
-                bs = bloom_mod.empty_bitset(bits)
+                bs = bloom_mod.empty_bitset(BLOOM_BITS_PER_BUCKET)
                 bloom_mod.add(bs, hashes)
                 blob = bs.tobytes()
             return pd.DataFrame(
@@ -573,230 +791,9 @@ class FrontierEngine:
         # old blocks). One bounded job per round: n_buckets rows.
         self._seen_state = _checkpoint_truncated(new_state)
 
-    def _rewrite_urls(self, frontier: DataFrame) -> DataFrame:
-        """Apply per-host DUST param-strip rules (url_rewrites_df), then
-        the exact URL→canonical alias map (url_alias_df), to a frontier
-        frame. DUST is a map-only broadcast join + array filter +
-        rejoin; the alias pass is an equi-join on url_hash with url /
-        host / url_hash rebuilt for matched rows (a rel=canonical
-        target may live on a different host, so politeness keys must
-        follow). Rule-less and alias-less rows pass through
-        byte-identical."""
-        if self._rewrites is None and self._aliases is None:
-            return frontier
-        from ..urlnorm import host_expr, strip_params_expr
-        if self._rewrites is not None:
-            # frontier URLs are canonicalize()d (fragment already
-            # stripped); the shared expression preserves fragments on
-            # raw inputs too.
-            new_url = strip_params_expr(F.col("url"), F.col("_strip"))
-            frontier = (frontier
-                        .join(F.broadcast(self._rewrites), "host", "left")
-                        .withColumn("url", new_url)
-                        .withColumn("url_hash", F.xxhash64("url"))
-                        .drop("_strip"))
-        if self._aliases is not None:
-            # key on a FRESH hash of the (possibly DUST-stripped) url —
-            # cont rows reach here before their url_hash column is
-            # recomputed (the UDF skips per-link hashing), so joining
-            # the stale column would silently skip every alias
-            frontier = (frontier
-                        .withColumn("_akey", F.xxhash64("url"))
-                        .join(self._aliases, "_akey", "left")
-                        .withColumn(
-                            "url", F.coalesce(F.col("_canon"),
-                                              F.col("url")))
-                        .withColumn(
-                            "host",
-                            F.when(F.col("_canon").isNotNull(),
-                                   host_expr(F.col("url")))
-                            .otherwise(F.col("host")))
-                        .withColumn("url_hash", F.xxhash64("url"))
-                        .drop("_canon", "_akey"))
-        return frontier
-
-    def _rank_politeness(self, frontier: DataFrame) -> DataFrame:
-        """Per-host fetch-slot ranking (SURVEY §2.6): adds ``_rank``/``_slots``
-        columns (no filtering here — the caller checkpoints the ranked frame
-        ONCE and derives both admitted and deferred from the same blocks, so
-        the admission pipeline never recomputes).
-        Priority (depth DESC, sort_index ASC, url) = DFS-with-limit."""
-        if not self.politeness:
-            return frontier
-        slots = self.concurrency
-        if self.robots_df is not None:
-            slotted = self.robots_df.select(
-                "host", F.col("crawl_delay").alias("_cd"))
-            frontier = frontier.join(F.broadcast(slotted), "host", "left")
-            frontier = frontier.withColumn(
-                "_slots",
-                F.when(F.col("_cd").isNull(), F.lit(slots)).otherwise(
-                    F.greatest(
-                        F.lit(1),
-                        F.least(
-                            F.lit(slots * 100),
-                            (F.lit(self.round_seconds) / F.col("_cd"))
-                            .cast("int"),
-                        ),
-                    )
-                ),
-            ).drop("_cd")
-        else:
-            frontier = frontier.withColumn("_slots", F.lit(slots))
-        if self.host_budget_df is not None:
-            frontier = (frontier
-                        .join(F.broadcast(self.host_budget_df),
-                              "host", "left")
-                        .withColumn("_slots", F.coalesce(
-                            F.least(F.col("_slots"), F.col("_budget")),
-                            F.col("_slots")))
-                        .drop("_budget"))
-        if self.host_delay_df is not None:
-            delay_slots = F.greatest(
-                F.lit(1),
-                F.least(F.lit(slots * 100),
-                        (F.lit(int(self.round_seconds * 1000))
-                         / F.col("_delay_ms")).cast("int")))
-            frontier = (frontier
-                        .join(F.broadcast(self.host_delay_df),
-                              "host", "left")
-                        .withColumn("_slots", F.coalesce(
-                            F.least(F.col("_slots"), delay_slots),
-                            F.col("_slots")))
-                        .drop("_delay_ms"))
-        order = [F.col("depth").desc(),
-                 F.col("sort_index").asc_nulls_last(),
-                 F.col("url").asc()]
-        if self.priority_df is not None:
-            # score-ordered admission: scored URLs outrank unscored
-            # (NULL last), score breaks before the DFS keys. The join is
-            # a plain equi-join on url_hash — at scale both sides are
-            # url-keyed tables and AQE picks broadcast when the score
-            # table is small.
-            frontier = frontier.join(self.priority_df, "url_hash", "left")
-            order = [F.col("priority").desc_nulls_last(), *order]
-        S = self.politeness_salt_buckets
-        if S > 1:
-            # Two-phase admission against hot-host skew (SURVEY §7.3): a
-            # 10^9-row host would make the single per-host ranking window
-            # one straggler task. Phase 1 ranks within (host, salt) buckets
-            # — rows beyond `slots` in their bucket cannot be in the host's
-            # global top `slots`, so they defer without ever entering the
-            # per-host shuffle. Phase 2 ranks only the survivors
-            # (≤ hosts × S × slots rows — bounded however hot the host).
-            # The total order (…, url) is salt-invariant, so the admitted
-            # set is IDENTICAL to the single-window plan.
-            salt = F.pmod(F.coalesce(F.col("url_hash"), F.lit(0)),
-                          F.lit(S))
-            w1 = Window.partitionBy("host", salt).orderBy(*order)
-            b_ranked = frontier.withColumn(
-                "_brank", F.row_number().over(w1))
-            cand = b_ranked.filter(F.col("_brank") <= F.col("_slots"))
-            rest = b_ranked.filter(F.col("_brank") > F.col("_slots"))
-            w2 = Window.partitionBy("host").orderBy(*order)
-            cand = cand.withColumn("_rank", F.row_number().over(w2))
-            rest = rest.withColumn(
-                "_rank", F.col("_slots") + F.col("_brank"))
-            return cand.unionByName(rest).drop("_brank")
-        w = Window.partitionBy("host").orderBy(*order)
-        return frontier.withColumn("_rank", F.row_number().over(w))
-
-    def _redirects(self) -> DataFrame | None:
-        """Lazily built redirect hop-closure (frontier/redirects.py); the
-        build cost is O(redirect rows), paid once per engine, zero when
-        the pages table has no ``redirect_to`` column."""
-        if self._redirect_src is None:
-            return None
-        if self._redirect_closure_df is None:
-            from .redirects import redirect_closure
-            self._redirect_closure_df = redirect_closure(
-                self._redirect_src, self.max_redirects)
-            n = self._redirect_closure_df.count()
-            self._redirects_small = n <= self.broadcast_threshold
-        return self._redirect_closure_df
-
-    def _resolve_redirects(self, frontier: DataFrame,
-                           round_no: int) -> DataFrame:
-        """Rewrite frontier rows that point at a redirect source to their
-        FINAL url (referer := the redirecting url, per the reference's
-        final-hop referer); rows whose chain exhausts the ``follow`` limit
-        (loops included) drop with an error metric — the distributed form
-        of needle's "Max redirects reached. Possible loop in: <url>".
-        Runs BEFORE URL-seen dedup, so the seen set keys final urls and a
-        target reached via two different sources fetches exactly once."""
-        closure = self._redirects()
-        if closure is None:
-            return frontier
-        cc = closure.select(
-            F.col("url_hash").alias("_r_key"),
-            F.col("final_url").alias("_r_final"),
-            F.col("final_hash").alias("_r_fhash"),
-            F.col("final_host").alias("_r_fhost"),
-            F.col("ok").alias("_r_ok"))
-        if self._redirects_small:
-            cc = F.broadcast(cc)
-        joined = frontier.join(cc, frontier["url_hash"] == cc["_r_key"],
-                               "left")
-        # max-redirects failures: counted per source host like fetch
-        # errors; lazy frame over checkpointed frontier blocks + the
-        # checkpointed closure, executed once in _flush_metrics
-        self._pending_metrics.append(
-            joined.filter(F.col("_r_ok") == F.lit(False))
-            .groupBy("host")
-            .agg(F.count("*").alias("fetched"),
-                 F.lit(0).cast("long").alias("parsed"),
-                 F.count("*").alias("errors"))
-            .withColumn("round", F.lit(round_no)))
-        return (joined
-                .filter(F.col("_r_key").isNull() | F.col("_r_ok"))
-                .withColumn("referer",
-                            F.when(F.col("_r_key").isNotNull(),
-                                   F.col("url"))
-                            .otherwise(F.col("referer")))
-                .withColumn("url", F.coalesce("_r_final", "url"))
-                .withColumn("url_hash", F.coalesce("_r_fhash", "url_hash"))
-                .withColumn("host", F.coalesce("_r_fhost", "host"))
-                .select(*_FRONTIER_COLS))
-
-    def _apply_robots(self, frontier: DataFrame) -> DataFrame:
-        """Drop robots-disallowed URLs (never fetched; logged as metrics).
-
-        Two robots-table shapes:
-
-        - ``rules`` column (``politeness.RULES_TYPE``, built by
-          ``compile_robots``): full RFC 9309 semantics — ``*`` wildcards,
-          ``$`` anchors, longest-pattern-wins with Allow on ties —
-          evaluated ENTIRELY JVM-side: filter the rule array down to
-          regex matches, then ``array_max`` over (len, allow) structs is
-          exactly the RFC precedence (struct compare is field-ordered, so
-          longer patterns win and ``true > false`` breaks ties toward
-          Allow). No Python touches the frontier.
-        - legacy ``disallow`` prefix array: simple EXISTS(startswith).
-        """
-        if self.robots_df is None:
-            return frontier
-        path = F.parse_url(F.col("url"), F.lit("PATH"))
-        if "rules" in self.robots_df.columns:
-            rules = F.broadcast(self.robots_df.select("host", "rules"))
-            joined = frontier.join(rules, "host", "left")
-            matched = F.filter(
-                F.coalesce(F.col("rules"), F.array()),
-                lambda r: F.regexp_like(path, r["rx"]))
-            verdict = F.array_max(F.transform(
-                matched,
-                lambda r: F.struct(r["len"].alias("l"),
-                                   r["allow"].alias("a"))))
-            blocked = verdict.isNotNull() & ~verdict["a"]
-            return joined.filter(~blocked).drop("rules")
-        if "disallow" not in self.robots_df.columns:
-            return frontier
-        rules = F.broadcast(self.robots_df.select("host", "disallow"))
-        joined = frontier.join(rules, "host", "left")
-        blocked = F.exists(
-            F.coalesce(F.col("disallow"), F.array()),
-            lambda p: path.startswith(p),
-        )
-        return joined.filter(~blocked).drop("disallow")
+    # ------------------------------------------------------------------
+    # fetch
+    # ------------------------------------------------------------------
 
     def _fetch_join(self, frontier: DataFrame, round_size: int) -> DataFrame:
         """frontier ⋈ pages on url_hash. Small rounds broadcast the frontier
@@ -851,13 +848,6 @@ class FrontierEngine:
             out = out.withColumn("content_type", F.lit("text/html"))
         return out
 
-    def _run_round(self, chains: list[Chain], frontier: DataFrame,
-                   round_no: int, round_size: int) -> DataFrame:
-        joined = self._fetch_join(frontier, round_size)
-        out = joined.mapInPandas(make_extract_udf(chains, round_no),
-                                 OUT_SCHEMA)
-        return out
-
     # ------------------------------------------------------------------
     # chain mode
     # ------------------------------------------------------------------
@@ -875,7 +865,7 @@ class FrontierEngine:
         (reference lib/Command.js:168-180) is a per-origin count join, also
         distributed. The only driver-side values are per-round counts."""
         chains = collect_chains(chain)
-        frontier = self._frontier_df(initial_continuations(chain))
+        frontier = _frontier_df(self.spark, initial_continuations(chain))
         n_frontier = frontier.count()
         out_parts: list[DataFrame] = []
         frontier_parts: list[DataFrame] = []
@@ -887,7 +877,8 @@ class FrontierEngine:
                 self.state.commit_round("frontier", round_no, frontier,
                                         meta={"size": n_frontier})
             out = _checkpoint_truncated(
-                self._run_round(chains, frontier, round_no, n_frontier))
+                self._fetch_join(frontier, n_frontier)
+                .mapInPandas(make_extract_udf(chains, round_no), OUT_SCHEMA))
             out_parts.append(out)
             self._pending_metrics.append(
                 out.filter(F.col("row_kind") == "metric")
@@ -901,15 +892,11 @@ class FrontierEngine:
         self._flush_metrics()
         if not out_parts:
             return self.spark.createDataFrame([], "value_json string")
-        allout = out_parts[0]
-        for p in out_parts[1:]:
-            allout = allout.unionByName(p)
+        allout = reduce(DataFrame.unionByName, out_parts)
 
         # all-failed fallback (per-origin count join): an origin whose every
         # continuation 404'd merges its accumulated partial
-        fronts = frontier_parts[0]
-        for p in frontier_parts[1:]:
-            fronts = fronts.unionByName(p)
+        fronts = reduce(DataFrame.unionByName, frontier_parts)
         n_in = (fronts.filter(F.col("origin_id").isNotNull())
                 .groupBy("origin_id").agg(F.count("*").alias("_n_in")))
         fails = allout.filter(F.col("row_kind") == "fail")
@@ -986,24 +973,27 @@ class FrontierEngine:
                   .select("value_json"))
         return result
 
-    def _flush_metrics(self) -> None:
-        """Aggregate all rounds' per-partition metric rows in ONE job (the
-        per-round rows read from already-checkpointed blocks; the deferred
-        404-miss anti-joins execute here, once, not per round).
+    @property
+    def metrics(self) -> DataFrame | None:
+        """Per-host crawl metrics (round, host, fetched, parsed, errors):
+        the committed ``metrics`` state table when a TableIO is attached,
+        else the lazy aggregate of this engine's runs; None before any
+        run. Never collected — a web-scale crawl has 10^6–10^7 hosts,
+        which would OOM a driver-side list."""
+        if self.state is not None:
+            return self.state.read_all("metrics")
+        return self._metrics
 
-        With a state TableIO attached the aggregate is committed to the
-        ``metrics`` state table WITHOUT touching the driver — a web-scale
-        crawl has 10^6–10^7 hosts and a driver-side list would OOM; query
-        it via ``state.read_all("metrics")``. The in-memory
-        ``metrics_rows`` convenience list is populated only on stateless
-        (small/test) runs."""
+    def _flush_metrics(self) -> None:
+        """Aggregate all rounds' per-partition metric rows in ONE frame
+        (the per-round rows read from already-checkpointed blocks; the
+        deferred 404-miss anti-joins execute with it, once, not per
+        round): committed to the ``metrics`` state table in one job when
+        a TableIO is attached, kept lazy otherwise."""
         if not self._pending_metrics:
             return
-        dfs = self._pending_metrics
+        union = reduce(DataFrame.unionByName, self._pending_metrics)
         self._pending_metrics = []
-        union = dfs[0]
-        for d in dfs[1:]:
-            union = union.unionByName(d)
         agg = (union.groupBy("round", "host")
                .agg(F.sum("fetched").alias("fetched"),
                     F.sum("parsed").alias("parsed"),
@@ -1013,12 +1003,9 @@ class FrontierEngine:
             # a new metrics round; read_all("metrics") unions them)
             self.state.commit_round(
                 "metrics", self.state.last_round("metrics") + 1, agg)
-            return
-        rows = agg.collect()
-        for r in sorted(rows, key=lambda r: (r.round, str(r.host))):
-            self.metrics_rows.append(
-                {"round": r.round, "host": r.host, "fetched": r.fetched,
-                 "parsed": r.parsed, "errors": r.errors})
+        else:
+            self._metrics = (agg if self._metrics is None
+                             else self._metrics.unionByName(agg))
 
     # ------------------------------------------------------------------
     # whole-corpus extraction (no frontier recursion)
@@ -1052,15 +1039,8 @@ class FrontierEngine:
         one mapInPandas — so every input row yields exactly one log row;
         at scale, pass the round's admitted frontier through the same
         pipeline instead of a driver-side list."""
-        from ..urlnorm import canonicalize, url_host, xxhash64_py
-        rows = []
-        for i, u in enumerate(urls):
-            cu = canonicalize(u)
-            rows.append({"url": cu, "url_hash": xxhash64_py(cu.encode()),
-                         "host": url_host(cu), "depth": 0, "sort_index": i,
-                         "referer": None, "kind": "crawl", "method": "get"})
-        frontier = self._frontier_df(rows)
-        joined = self._fetch_join(frontier, len(rows))
+        frontier = seed_frontier(self.spark, urls)
+        joined = self._fetch_join(frontier, len(urls))
         out = joined.select("url", "url_hash", "host", "depth", "referer",
                             "html", "page_status", "content_type") \
             .mapInPandas(make_crawl_udf(extract_spec, None), OUT_SCHEMA)
@@ -1098,10 +1078,7 @@ class FrontierEngine:
 
         Returns (records_df(url, depth, value_json), visit_rounds) where
         visit_rounds is the per-round admitted visit log metadata."""
-        from ..urlnorm import canonicalize
-
         spark = self.spark
-        import time as _time
 
         if resume_frontier is not None:
             frontier = resume_frontier.select(*_FRONTIER_COLS)
@@ -1112,18 +1089,7 @@ class FrontierEngine:
                     # URL-seen bucket, so rebuild must bucket identically
                     self._note_seen(prior.select("url_hash", "host"))
         else:
-            seeds = [
-                {"url": canonicalize(u), "depth": 0, "sort_index": i,
-                 "referer": None, "kind": "crawl", "method": "get"}
-                for i, u in enumerate(seed_urls)
-            ]
-            for s in seeds:
-                s["url_hash"] = xxhash64_py(s["url"].encode())
-                from ..urlnorm import url_host
-                s["host"] = url_host(s["url"])
-            frontier = self._rewrite_urls(self._frontier_df(seeds))
-            if self.url_predicate is not None:
-                frontier = frontier.filter(F.expr(self.url_predicate))
+            frontier = _fold(self._url_prep, seed_frontier(spark, seed_urls))
 
         records: DataFrame | None = None
         round_no = start_round
@@ -1139,39 +1105,34 @@ class FrontierEngine:
                                    respect_meta_robots=respect_meta_robots)
 
         # Each round is exactly TWO substantial jobs, both fully parallel:
-        #   A. admission pipeline (seen anti-join/probe → within-round window
-        #      winner → robots → politeness ranking) → localCheckpoint
+        #   A. the admission stages → localCheckpoint
         #   B. fetch join + extraction UDF → localCheckpoint
         # plus O(1) block-scan counts. No persist/unpersist dance: every
         # derived frame (admitted, deferred, seen part, records, next
         # frontier) is a filter over checkpointed blocks.
+        #
+        # Iterative loops pay fixed task-launch latency per shuffle stage;
+        # a 10k-row late-crawl round does not need 64 reduce tasks × 3
+        # admission shuffles. With AQE on, AQE coalesces them at runtime;
+        # with AQE off the engine does the same job itself, sizing
+        # spark.sql.shuffle.partitions per round from the frontier size
+        # (PLANS §8).
         default_shuffle = None
-        if self.adaptive_shuffle:
-            try:
-                default_shuffle = int(
-                    spark.conf.get("spark.sql.shuffle.partitions"))
-            except Exception:
-                self.adaptive_shuffle = False
+        if spark.conf.get("spark.sql.adaptive.enabled").lower() != "true":
+            default_shuffle = int(
+                spark.conf.get("spark.sql.shuffle.partitions"))
         try:
             while round_no < end_round:
                 phase_t: dict[str, float] = {}
-                if self.adaptive_shuffle:
-                    # right-size reduce-task counts for this round's frontier
-                    # (small late-crawl rounds don't need 64 tasks × 3
-                    # admission shuffles of launch latency). The count is one
-                    # cheap scan over checkpointed blocks.
+                if default_shuffle is not None:
+                    # one cheap scan over checkpointed blocks
                     n_est = frontier.count()
                     target = max(8, min(default_shuffle, n_est // 1500 + 1))
                     spark.conf.set("spark.sql.shuffle.partitions", str(target))
-                t0 = _time.perf_counter()
-                fr = frontier
-                if self._redirect_src is not None:
-                    fr = self._resolve_redirects(fr, round_no)
-                if self.dedup:
-                    fr = self._dedup_round(fr)
-                fr = self._apply_robots(fr)
-                fr = self._rank_politeness(fr)
-                ranked = _checkpoint_truncated(fr)
+                t0 = time.perf_counter()
+                self._round = round_no
+                ranked = _checkpoint_truncated(
+                    _fold(self._admission, frontier))
                 if self.politeness:
                     admitted = ranked.filter(
                         F.col("_rank") <= F.col("_slots")).drop("_rank", "_slots")
@@ -1180,11 +1141,11 @@ class FrontierEngine:
                 else:
                     admitted, deferred = ranked, None
                 n_admitted = admitted.count()
-                phase_t["dedup_admit"] = round(_time.perf_counter() - t0, 2)
+                phase_t["dedup_admit"] = round(time.perf_counter() - t0, 2)
                 if n_admitted == 0:
                     break
 
-                t0 = _time.perf_counter()
+                t0 = time.perf_counter()
                 if self.dedup:
                     self._note_seen(admitted, n_rows=n_admitted)
                     if self.state is not None:
@@ -1192,14 +1153,14 @@ class FrontierEngine:
                         # rebuilds the URL-seen buckets (north rule: resumable)
                         self.state.commit_round(
                             "seen", round_no, admitted.select("url_hash", "host"))
-                phase_t["seen_update"] = round(_time.perf_counter() - t0, 2)
+                phase_t["seen_update"] = round(time.perf_counter() - t0, 2)
 
-                t0 = _time.perf_counter()
+                t0 = time.perf_counter()
                 if 0 < n_admitted <= self.broadcast_threshold:
                     # hot path: INNER broadcast join only — corpus html never
                     # moves, no 404 union in the round job. The miss metrics
                     # (key-only anti-join over the checkpointed admitted blocks)
-                    # are deferred to the single _flush_metrics job.
+                    # are deferred to the single _flush_metrics frame.
                     joined = self._with_response_meta(
                         self.pages.join(F.broadcast(admitted), "url_hash",
                                         "inner"))
@@ -1221,26 +1182,22 @@ class FrontierEngine:
                 # ONE materialization per round: everything downstream (records,
                 # next frontier, metrics) reads the checkpointed blocks
                 out = _checkpoint_truncated(out)
-                phase_t["extract"] = round(_time.perf_counter() - t0, 2)
+                phase_t["extract"] = round(time.perf_counter() - t0, 2)
 
-                t0 = _time.perf_counter()
+                t0 = time.perf_counter()
                 round_records = out.filter(F.col("row_kind") == "root").select(
                     "url", "depth", "value_json")
-                # metrics aggregate lazily (one job at the end, not per round);
-                # normalized to the narrow (round, host, fetched, parsed,
-                # errors) shape shared with the deferred miss metrics
+                # metrics aggregate lazily (one frame at the end, not per
+                # round); normalized to the narrow (round, host, fetched,
+                # parsed, errors) shape shared with the deferred miss metrics
                 self._pending_metrics.append(
                     out.filter(F.col("row_kind") == "metric")
                        .select(F.lit(round_no).alias("round"), "host",
                                "fetched", "parsed", "errors"))
 
-                conts = out.filter(F.col("row_kind") == "cont") \
-                           .filter(F.col("depth") <= max_depth)
-                conts = self._rewrite_urls(conts)
-                if self.url_predicate is not None:
-                    conts = conts.filter(F.expr(self.url_predicate))
-                conts = conts.withColumn("url_hash", F.xxhash64("url")) \
-                             .select(*_FRONTIER_COLS)
+                conts = _fold(self._url_prep,
+                              out.filter(F.col("row_kind") == "cont")
+                              .filter(F.col("depth") <= max_depth))
                 if deferred is not None:
                     conts = conts.unionByName(deferred.select(*_FRONTIER_COLS))
 
@@ -1255,16 +1212,13 @@ class FrontierEngine:
                 else:
                     records = (round_records if records is None
                                else records.unionByName(round_records))
-                phase_t["commit"] = round(_time.perf_counter() - t0, 2)
+                phase_t["commit"] = round(time.perf_counter() - t0, 2)
 
-                import resource as _res
                 self._total_admitted += n_admitted
                 self._total_rounds += 1
                 visit_meta.append({
                     "round": round_no, "admitted": n_admitted,
-                    "phases": phase_t,
-                    "rss_mb": round(
-                        _res.getrusage(_res.RUSAGE_SELF).ru_maxrss / 1024.0, 1),
+                    "phases": phase_t, "rss_mb": round(_rss_mb(), 1),
                 })
                 frontier = conts
                 round_no += 1
@@ -1278,7 +1232,7 @@ class FrontierEngine:
                     break
 
         finally:
-            if self.adaptive_shuffle and default_shuffle is not None:
+            if default_shuffle is not None:
                 spark.conf.set("spark.sql.shuffle.partitions",
                                str(default_shuffle))
         self._flush_metrics()
@@ -1290,6 +1244,18 @@ class FrontierEngine:
             records = spark.createDataFrame(
                 [], "url string, depth int, value_json string")
         return records, visit_meta
+
+
+def _rehash(frontier: DataFrame) -> DataFrame:
+    """rehash: recompute url_hash JVM-side from the (possibly rewritten)
+    url and project onto the frontier columns."""
+    return (frontier.withColumn("url_hash", F.xxhash64("url"))
+            .select(*_FRONTIER_COLS))
+
+
+def _rss_mb() -> float:
+    return resource.getrusage(resource.RUSAGE_SELF).ru_maxrss / 1024.0
+
 
 def assemble_records(opens: list[dict], children: list[dict]) -> list:
     """Pure bottom-up assembly shared by driver fold and applyInPandas.

@@ -34,6 +34,7 @@ degrades through ``urlnorm.resolve``'s total, idempotent grammar.
 
 from __future__ import annotations
 
+import re
 from typing import Iterator
 
 import pandas as pd
@@ -47,11 +48,12 @@ _META_FIELDS = ("title string, canonical string, noindex boolean, "
 
 
 def robots_tokens(content: str) -> set:
-    """Parse a robots directive value ('NoIndex, nofollow') into its
-    lowercase token set — THE robots-content grammar, shared by the
+    """Parse a robots directive value ('NoIndex, nofollow', or the
+    space-separated 'noindex nofollow' major crawlers also honour) into
+    its lowercase token set — THE robots-content grammar, shared by the
     indexer side here and the crawl loop's ``respect_meta_robots``
     (``extract.make_crawl_udf``); fix directive semantics in one place."""
-    return {t.strip().lower() for t in content.split(",") if t.strip()}
+    return {t.lower() for t in re.split(r"[,\s]+", content) if t}
 
 
 def robots_flags(content: str) -> tuple:

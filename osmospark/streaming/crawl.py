@@ -49,16 +49,6 @@ FRONTIER_FILE_SCHEMA = ("url string, url_hash long, host string, "
                         "depth int, referer string")
 
 
-def _seed_rows(seed_urls: list[str]) -> list[dict]:
-    from ..urlnorm import canonicalize, url_host, xxhash64_py
-    rows = []
-    for u in seed_urls:
-        cu = canonicalize(u)
-        rows.append({"url": cu, "url_hash": xxhash64_py(cu.encode()),
-                     "host": url_host(cu), "depth": 0, "referer": None})
-    return rows
-
-
 def streaming_crawl(
     spark: SparkSession,
     pages_df: DataFrame,
@@ -86,7 +76,7 @@ def streaming_crawl(
     ~FPR of genuinely-new URLs — size ``bloom_bits_per_bucket`` for the
     expected keys per bucket)."""
     from ..extract import OUT_SCHEMA, make_crawl_udf
-    from ..frontier.engine import FrontierEngine
+    from ..frontier.engine import FrontierEngine, seed_frontier
     from . import _stateful_unseen
 
     frontier_dir = os.path.join(workdir, "frontier")
@@ -95,7 +85,8 @@ def streaming_crawl(
     os.makedirs(frontier_dir, exist_ok=True)
 
     # seed round 0 + an empty records table so the return read always works
-    spark.createDataFrame(_seed_rows(seed_urls), FRONTIER_FILE_SCHEMA) \
+    seed_frontier(spark, seed_urls) \
+        .select("url", "url_hash", "host", "depth", "referer") \
         .coalesce(1).write.mode("append").parquet(frontier_dir)
     spark.createDataFrame([], RECORDS_SCHEMA) \
         .write.mode("append").parquet(records_dir)

@@ -191,7 +191,7 @@ def strip_params_expr(u, strip_col):
     named in the array column ``strip_col`` removed (other params kept
     in order), the ``#fragment`` — if any — preserved. NULL strip set
     or no query string → ``u`` unchanged, byte-identical. Used by both
-    ``apply_dust_rules`` and ``FrontierEngine._rewrite_urls`` so the
+    ``apply_dust_rules`` and ``FrontierEngine._strip_params`` so the
     two can never drift. Pure map-side expression — no shuffle."""
     from pyspark.sql import functions as F
 

@@ -95,11 +95,12 @@ def parse_args(argv):
                         "cheaper than it is stored")
     p.add_argument("--aqe", choices=["on", "off"], default="on",
                    help="adaptive query execution: 'on' (real-cluster "
-                        "default) or 'off' (benchmark discipline — AQE's "
-                        "per-stage barriers cost ~0.5s/round on "
-                        "many-small-job crawl loops; the engine "
-                        "right-sizes shuffle partitions per round "
-                        "itself)")
+                        "default: AQE coalesces shuffle partitions) or "
+                        "'off' (benchmark discipline — AQE's per-stage "
+                        "barriers cost ~0.5s/round on many-small-job "
+                        "crawl loops). The engine reads this setting: "
+                        "with AQE off it right-sizes shuffle partitions "
+                        "per round itself")
     return p.parse_args(argv)
 
 

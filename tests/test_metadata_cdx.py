@@ -419,6 +419,59 @@ def test_frontier_url_alias_multi_target_never_fans_out(spark):
     assert urls == ["A", "C1"]  # deterministic min target, one row
 
 
+def test_frontier_url_alias_hash_collision_is_inert(spark):
+    """The alias join checks the URL, not only its 64-bit hash: a planted
+    alias row keyed on a real frontier URL's xxhash64 but holding a
+    different source URL neither rewrites nor duplicates that URL."""
+    from osmospark.frontier import FrontierEngine
+    from osmospark.urlnorm import xxhash64_py
+    H = "http://al.test"
+    pages = spark.createDataFrame(
+        [(f"{H}/A", None, f'<body><a href="/B"></a></body>'.encode(),
+          "", "en"),
+         (f"{H}/B", None, b"<body>b</body>", "", "en"),
+         (f"{H}/X", None, b"<body>x</body>", "", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string")
+    alias = spark.createDataFrame([(f"{H}/unrelated", f"{H}/X")],
+                                  "url string, canonical_url string")
+    eng = FrontierEngine(spark, pages, dedup=True, politeness=False,
+                         url_alias_df=alias)
+    eng._aliases = spark.createDataFrame(
+        [(xxhash64_py(f"{H}/B".encode()), f"{H}/ghost", f"{H}/X")],
+        "_akey long, url string, _canon string")
+    recs, _ = eng.run_crawl([f"{H}/A"], "a", extract_spec=None,
+                            max_depth=2)
+    urls = sorted(r.url.rsplit("/", 1)[1] for r in recs.collect())
+    assert urls == ["A", "B"]  # B fetched once, unchanged; X never
+
+
+def test_meta_robots_space_separated_tokens(spark):
+    """content="noindex nofollow" (space-separated, honoured by major
+    crawlers) sets both flags, and under respect_meta_robots the page
+    expands no links."""
+    from osmospark.frontier import FrontierEngine
+    from osmospark.functions.metadata import robots_flags
+    assert robots_flags("noindex nofollow") == (True, True)
+    assert robots_flags("NOINDEX ,\tnofollow") == (True, True)
+    H = "http://rbs.test"
+    rows = [
+        (f"{H}/A", b'<body><a href="/B"></a></body>'),
+        (f"{H}/B", (b'<head><meta name="robots" content="noindex nofollow">'
+                    b'</head><body><a href="/C"></a></body>')),
+        (f"{H}/C", b"<body>c</body>"),
+    ]
+    pages = spark.createDataFrame(
+        [(u, None, h, "", "en") for u, h in rows],
+        "url string, warc_ts timestamp, html binary, text string, lang string")
+    eng = FrontierEngine(spark, pages, dedup=True, politeness=False)
+    recs, meta = eng.run_crawl([f"{H}/A"], "a", extract_spec=None,
+                               max_depth=3, respect_meta_robots=True)
+    # B is visited (round 1 admits it) but noindex drops its record and
+    # nofollow keeps C out of the frontier
+    assert [r.url for r in recs.collect()] == [f"{H}/A"]
+    assert [m["admitted"] for m in meta] == [1, 1]
+
+
 # -------------------------------------- property pins + full-loop compose
 
 def test_chunk_documents_reconstruction_property(spark):

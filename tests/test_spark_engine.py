@@ -92,26 +92,15 @@ def test_crawl_mode_dedup_and_depth(spark):
     assert sorted(urls) == sorted(r.url for r in records2.collect())
 
 
-def test_dedup_agg_identical_to_window(spark):
-    """The min_by group-agg winner must equal the window winner row for
-    row (beyond the crawl-level visit-set check): same crawl, byte-equal
-    records, plus a direct _dedup_round comparison on a frontier with
-    duplicate urls, null sort_index/referer, and depth conflicts."""
-    pages = synth_corpus(n_urls=60, n_hosts=4)
+def test_dedup_window_winner_order(spark):
+    """The within-round winner (_dedup_round) keeps, per url, the
+    highest-priority row by the admission order — depth DESC, then
+    sort_index ASC NULLS LAST, then referer ASC NULLS FIRST — on a
+    hand-built frontier with duplicate urls, null sort_index/referer and
+    depth conflicts."""
     pages_df = spark.createDataFrame(
-        pages_rows(pages),
+        [("http://h/", None, b"", "", "en")],
         "url string, warc_ts timestamp, html binary, text string, lang string")
-    seeds = seed_urls(pages)
-    outs = {}
-    for via in ("window", "agg"):
-        eng = FrontierEngine(spark, pages_df, dedup=True, dedup_via=via)
-        records, _ = eng.run_crawl(
-            seeds, "li > a", extract_spec={"payload": "div"}, max_depth=3)
-        outs[via] = sorted((r.url, r.depth, r.value_json)
-                           for r in records.collect())
-    assert outs["window"] == outs["agg"]
-
-    # direct comparison on a hand-built frontier exercising the order keys
     rows = [
         # same url: depth DESC wins
         {"url": "http://h/a", "depth": 1, "sort_index": 5, "referer": "r1"},
@@ -131,14 +120,11 @@ def test_dedup_agg_identical_to_window(spark):
                  root_id=None, **r) for r in rows]
     from osmospark.frontier.engine import FRONTIER_SCHEMA
     fr = spark.createDataFrame(base, FRONTIER_SCHEMA)
-    picked = {}
-    for via in ("window", "agg"):
-        eng = FrontierEngine(spark, pages_df, dedup=True, dedup_via=via)
-        picked[via] = sorted(
-            (r.url, r.depth, r.sort_index, r.referer)
-            for r in eng._dedup_round(fr).collect())
-    assert picked["window"] == picked["agg"]
-    by_url = {u: (d, s, ref) for u, d, s, ref in picked["agg"]}
+    eng = FrontierEngine(spark, pages_df, dedup=True)
+    picked = [(r.url, r.depth, r.sort_index, r.referer)
+              for r in eng._dedup_round(fr).collect()]
+    by_url = {u: (d, s, ref) for u, d, s, ref in picked}
+    assert len(picked) == len(by_url) == 3
     assert by_url["http://h/a"] == (2, 9, "r2")
     assert by_url["http://h/b"] == (1, 3, "y")
     assert by_url["http://h/c"] == (0, 1, None)
@@ -220,7 +206,7 @@ def test_crawl_error_taxonomy_in_metrics(spark):
     engine = FrontierEngine(spark, pages_df, dedup=True)
     records, _ = engine.run_crawl(
         [f"{host}/"], "a", extract_spec={"payload": "div"}, max_depth=1)
-    errs = sum(m["errors"] for m in engine.metrics_rows)
+    errs = sum(m.errors for m in engine.metrics.collect())
     assert errs == 3  # empty + noroot + missing
     # the good page still extracted
     ok = [r for r in records.collect() if r.url.endswith("/ok")]
@@ -427,19 +413,20 @@ def test_crawl_follows_redirects_with_final_url_dedup(spark):
     # collapse on the final url), d/3 (via hop/1's 5-hop chain);
     # hop/0 and loop/a dropped as max-redirects errors
     assert urls == [f"{h}/d/1", f"{h}/d/2", f"{h}/d/3", f"{h}/start"]
-    errs = {(m["round"], m["host"]): m["errors"]
-            for m in engine.metrics_rows}
+    errs = {(m.round, m.host): m.errors
+            for m in engine.metrics.collect()}
     assert errs[(1, "a.local")] == 2  # hop/0 + loop/a
 
 
 def test_crawl_redirects_off_flag(spark):
-    """follow_redirects=False ignores the redirect_to column entirely:
-    redirect sources join as ordinary pages (whose empty bodies then fail
+    """Without a redirect_to column there is no redirect stage: redirect
+    sources join as ordinary pages (whose empty bodies then fail
     extraction, the reference's empty-body error), so redirect TARGETS are
     never reached."""
     h = "http://a.local"
-    engine = FrontierEngine(spark, _redirect_pages_df(spark), dedup=True,
-                            politeness=False, follow_redirects=False)
+    engine = FrontierEngine(spark,
+                            _redirect_pages_df(spark).drop("redirect_to"),
+                            dedup=True, politeness=False)
     records, _ = engine.run_crawl(
         [f"{h}/start"], "a", extract_spec=None, max_depth=1)
     urls = {r.url for r in records.collect()}

@@ -258,9 +258,9 @@ def test_crawl_survives_total_executor_state_loss(spark, tmp_path,
 
 def test_metrics_commit_to_state_table_not_driver(spark, tmp_path):
     """With a TableIO attached, per-host crawl metrics are committed to
-    the 'metrics' state table (queryable via read_all) and the driver
-    list stays EMPTY — 10^6+ hosts must never accumulate on the driver.
-    Stateless runs keep the in-memory convenience list."""
+    the 'metrics' state table and ``engine.metrics`` reads that table —
+    no per-host rows ever sit on the driver (10^6+ hosts). Stateless
+    runs expose the same-shaped lazy aggregate."""
     from osmospark.corpus import pages_rows, seed_urls, synth_corpus
     from osmospark.frontier import FrontierEngine
     from osmospark.tableio import TableIO
@@ -273,8 +273,13 @@ def test_metrics_commit_to_state_table_not_driver(spark, tmp_path):
     eng = FrontierEngine(spark, pages_df, state=io, dedup=True)
     eng.run_crawl(seed_urls(pages), "li > a",
                   extract_spec={"p": "div"}, max_depth=3)
-    assert eng.metrics_rows == []
-    m = io.read_all("metrics")
+    m = eng.metrics
+    # the metrics frame is a scan of the committed table, not rows the
+    # driver collected and re-parallelized
+    plan = m._jdf.queryExecution().analyzed().toString()
+    assert "LocalRelation" not in plan
+    assert sorted(m.inputFiles()) == sorted(io.read_all("metrics")
+                                           .inputFiles())
     fetched = sum(r.fetched for r in m.collect())
     assert fetched > 0
     assert {c for c in m.columns} == {"round", "host", "fetched",
@@ -283,7 +288,8 @@ def test_metrics_commit_to_state_table_not_driver(spark, tmp_path):
     eng2 = FrontierEngine(spark, pages_df, dedup=True)
     eng2.run_crawl(seed_urls(pages), "li > a",
                    extract_spec={"p": "div"}, max_depth=3)
-    assert sum(r["fetched"] for r in eng2.metrics_rows) == fetched
+    assert set(eng2.metrics.columns) == set(m.columns)
+    assert sum(r.fetched for r in eng2.metrics.collect()) == fetched
 
 
 def test_bloom_mode_matches_auto_and_keeps_state_off_driver(spark):
@@ -507,6 +513,52 @@ def test_engine_applies_rfc_rules_jvm_side(spark):
     assert kept == expected
     assert "/d/15" in kept and "/d/2" in kept and "/d/3" not in kept
     assert "/d/47" not in kept and "/d/31" in kept
+
+
+def test_robots_without_rules_raises_at_construction(spark):
+    """The engine takes compile_robots output only: a robots frame without
+    a 'rules' column (e.g. a bare disallow-prefix table) is refused when
+    the engine is built, instead of silently filtering nothing."""
+    from osmospark.frontier import FrontierEngine
+    pages = spark.createDataFrame(
+        [("http://a.local/", None, b"", "", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string")
+    legacy = spark.createDataFrame([("a.local", ["/d/1"])],
+                                   "host string, disallow array<string>")
+    with pytest.raises(ValueError, match="rules"):
+        FrontierEngine(spark, pages, robots_df=legacy)
+
+
+def test_host_slots_one_frame_least_of_caps(spark):
+    """Robots Crawl-delay, host budgets and adaptive delays merge into ONE
+    (host, _slots) frame: least(coalesce(robots_cap, concurrency), budget,
+    delay_cap), NULLs skipped, delay caps clamped to [1, concurrency*100];
+    a budget of 0 starves its host and a non-positive Crawl-delay sets no
+    cap (as politeness.host_slots)."""
+    from osmospark.frontier import FrontierEngine
+    from osmospark.frontier.politeness import compile_robots
+
+    robots = compile_robots(spark.createDataFrame(
+        [("r.test", "User-agent: *\nCrawl-delay: 15\n"),
+         ("z.test", "User-agent: *\nCrawl-delay: 0\n"),
+         ("b.test", "User-agent: *\nCrawl-delay: 1\n")],
+        "host string, robots_txt string"))
+    budget = spark.createDataFrame([("b.test", 0), ("r.test", 5)],
+                                   "host string, slots int")
+    delays = spark.createDataFrame([("d.test", 10_000), ("b.test", 1)],
+                                   "host string, delay_ms long")
+    pages = spark.createDataFrame(
+        [("http://a.local/", None, b"", "", "en")],
+        "url string, warc_ts timestamp, html binary, text string, lang string")
+    eng = FrontierEngine(spark, pages, politeness=True, concurrency=4,
+                         round_seconds=30, robots_df=robots,
+                         host_budget_df=budget, host_delay_df=delays)
+    assert dict(eng._slots.collect()) == {
+        "r.test": 2,   # 30 s / 15 s Crawl-delay, under the budget of 5
+        "z.test": 4,   # Crawl-delay 0: no cap, concurrency
+        "b.test": 0,   # budget 0 starves; robots 30 and delay 400 lose
+        "d.test": 3,   # 30,000 ms / 10,000 ms adaptive delay
+    }
 
 
 def test_cuckoo_filter_property_incremental_merge_sequence():
