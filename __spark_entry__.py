@@ -5450,7 +5450,8 @@ def oracle_sql() -> dict[str, str]:
             tot AS (SELECT CAST(sum(w) AS BIGINT) AS w_total FROM w),
             toks AS (
               SELECT source,
-                     CASE WHEN length(trim(text)) = 0 THEN 0
+                     CASE WHEN text IS NULL THEN 0
+                          WHEN length(trim(text)) = 0 THEN 0
                           ELSE len(regexp_split_to_array(trim(text),
                                                          '\\s+'))
                      END AS t

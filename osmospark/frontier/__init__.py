@@ -1,4 +1,4 @@
-"""Distributed frontier scheduler: Bloom URL-seen state, politeness,
+"""Distributed frontier scheduler: exact or cuckoo URL-seen state, politeness,
 DFS-priority admission, round loop + record assembly."""
 
 from .engine import FrontierEngine, assemble_records

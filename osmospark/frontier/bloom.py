@@ -1,4 +1,6 @@
-"""Partitioned Bloom URL-seen state.
+"""Partitioned Bloom URL-seen state — the streaming crawl's bounded-memory
+dedup (``streaming.crawl`` ``dedup_mode="bloom"``). The batch engine's
+probabilistic codec is the cuckoo filter (frontier/cuckoo.py).
 
 PySpark exposes no public Bloom-filter API (DataFrameStatFunctions has
 none), so this is a custom, partitioned structure per the north rule:

@@ -10,9 +10,10 @@ key cuckoo hashing — relocation needs only the stored fingerprint). At
 ~2·4/2^16 ≈ 0.012% at 95% load, far below Bloom's ~1% at 10 bits/key,
 with comparable space.
 
-Engine integration mirrors the Bloom backend (frontier/bloom.py): the
-keyspace is split by host bucket; each state row carries one filter blob
-plus the sorted exact-hash array that backstops correctness. Two
+Engine integration (``FrontierEngine(seen_mode="cuckoo")``, the batch
+engine's only probabilistic URL-seen codec): the keyspace is split by host
+bucket; each state row carries one filter blob plus the sorted exact-hash
+array that backstops correctness. Two
 properties the engine relies on:
 
 - **No false negatives, ever**: when an insert cannot place a fingerprint

@@ -6,7 +6,8 @@ Per round (SURVEY §3.1 lifecycle):
              → join pages corpus on url_hash (broadcast when small, AQE else)
              → extraction UDF (mapInPandas, page-scope chain execution)
              → records / child values / open records / next frontier
-             → atomic round commit (TableIO) + metrics
+             → round commit (TableIO): seen, records, then frontier
+               (frontier round k in its manifest is the commit point)
 
 Admission is one ordered list of named ``DataFrame → DataFrame`` stages,
 built once in ``__init__`` from what the engine was given (a stage whose
@@ -27,8 +28,9 @@ Two execution modes:
   :239-280 sortKey).
 - ``run_crawl(seeds, follow, extract)`` — the 10^10-scale path: per-page
   extraction closes records locally; the frontier recurses on a follow
-  selector up to ``max_depth`` with URL-seen dedup (Bloom prefilter + exact
-  anti-join backstop) and per-host politeness. DFS-with-limit ordering:
+  selector up to ``max_depth`` with URL-seen dedup (exact anti-join, or a
+  partitioned cuckoo prefilter + exact sorted-array backstop) and per-host
+  politeness. DFS-with-limit ordering:
   admission prioritizes ``(depth DESC, sort lineage ASC)``, reproducing the
   reference's LIFO queue discipline (reference lib/Queue.js:24-33,
   index.js:253-258) at round granularity.
@@ -55,7 +57,6 @@ from ..extract import (
 from ..record import merge_value
 from ..spec import Chain, collect_chains
 from ..urlnorm import canonicalize, host_expr, strip_params_expr, url_host
-from . import bloom as bloom_mod
 from . import cuckoo as cuckoo_mod
 from .politeness import DEFAULT_CONCURRENCY, DEFAULT_ROUND_SECONDS
 
@@ -84,13 +85,11 @@ FRONTIER_SCHEMA = StructType([
 _FRONTIER_COLS = [f.name for f in FRONTIER_SCHEMA.fields]
 
 # executor-resident URL-seen state: one row per host bucket
-_STATE_SCHEMA = "bucket int, bitset binary, hashes binary"
+_STATE_SCHEMA = "bucket int, cuckoo binary, hashes binary"
 
 # auto URL-seen: the seen-key set is broadcast to the anti-join while it
 # holds at most this many keys, shuffled beyond
 SEEN_BROADCAST_KEYS = 4_000_000
-# bloom URL-seen: bits per host-bucket bitset
-BLOOM_BITS_PER_BUCKET = 1 << 20
 
 
 def _checkpoint_truncated(df: DataFrame) -> DataFrame:
@@ -215,31 +214,27 @@ class FrontierEngine:
         self.politeness = politeness
         self.dedup = dedup
         self.politeness_salt_buckets = politeness_salt_buckets
-        if seen_mode not in ("auto", "bloom", "cuckoo"):
+        if seen_mode not in ("auto", "cuckoo"):
             raise ValueError(f"seen_mode {seen_mode!r} not in "
-                             "('auto', 'bloom', 'cuckoo')")
+                             "('auto', 'cuckoo')")
         self.seen_mode = seen_mode
-        # both probabilistic backends share the partitioned state-row
-        # machinery (probe cogroup, delta build, merge); they differ only
-        # in the per-bucket filter blob (Bloom bitset vs cuckoo
-        # fingerprint table — frontier/bloom.py vs frontier/cuckoo.py)
-        self._prob_seen = seen_mode in ("bloom", "cuckoo")
         self.bloom_buckets = bloom_buckets
         self.broadcast_threshold = broadcast_threshold
         self.round_seconds = round_seconds
         self._metrics: DataFrame | None = None  # stateless runs' metrics
         self._pending_metrics: list[DataFrame] = []
-        # URL-seen state, partitioned by host bucket (north rule). Two
-        # structures per bucket: a Bloom bitset (cheap prefilter, the
-        # structure that persists at 10^10 scale) and a sorted exact hash
-        # array (the correctness backstop — crawl ordering must be exact).
-        # The state is a DataFrame of rows (bucket, bitset binary,
-        # hashes binary) living on the EXECUTORS (localCheckpoint blocks):
-        # probes and merges run co-partitioned via cogroup+applyInPandas,
-        # so the driver only ever holds the DataFrame handle — never
-        # per-URL data (SURVEY §4 item 2, §7.3). At 10^10 URLs size
+        # cuckoo URL-seen state, partitioned by host bucket (north rule).
+        # Two structures per bucket: a cuckoo filter (cheap prefilter, the
+        # structure that persists at 10^10 scale — frontier/cuckoo.py) and
+        # a sorted exact hash array (the correctness backstop — crawl
+        # ordering must be exact). The state is a DataFrame of rows
+        # (bucket, cuckoo binary, hashes binary) living on the EXECUTORS
+        # (localCheckpoint blocks): probes and merges run co-partitioned
+        # via cogroup+applyInPandas, so the driver only ever holds the
+        # DataFrame handle — never per-URL data (SURVEY §4 item 2, §7.3).
+        # At 10^10 URLs size
         # ``bloom_buckets`` so each bucket's exact array stays executor-
-        # memory-sized (e.g. 2^14 buckets → ~5 MB/bucket exact + bitset).
+        # memory-sized (e.g. 2^14 buckets → ~5 MB/bucket exact + filter).
         self._seen_state: DataFrame | None = None
         # auto mode: the seen set is a list of per-round persisted key
         # DataFrames (url_hash); dedup = JVM broadcast LEFT ANTI while the
@@ -484,7 +479,7 @@ class FrontierEngine:
           the seen set fits ``SEEN_BROADCAST_KEYS``, shuffle anti-join that
           AQE can skew-split beyond. The anti-join runs BEFORE the winner
           window so already-seen rows never enter its shuffle.
-        - ``bloom``/``cuckoo``: the partitioned filter + exact-array probe
+        - ``cuckoo``: the partitioned filter + exact-array probe
           — the frontier cogroups with the EXECUTOR-RESIDENT state table
           on the host bucket (``cogroup(...).applyInPandas``), so each
           bucket's blobs meet its frontier rows co-partitioned, once, with
@@ -495,7 +490,7 @@ class FrontierEngine:
           (``searchsorted``), the backstop that keeps the visit set exact
           despite false positives.
         """
-        if self._prob_seen:
+        if self.seen_mode == "cuckoo":
             if self._seen_state is None:
                 return frontier
             return self._probe_seen_state(frontier)
@@ -654,7 +649,6 @@ class FrontierEngine:
         schema = frontier.schema
         cols = [f.name for f in schema.fields]
         tagged = frontier.withColumn("_bucket", self._bucket_col())
-        mode = self.seen_mode
 
         def probe(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
             import numpy as np
@@ -663,12 +657,8 @@ class FrontierEngine:
                 return left
             ex = np.frombuffer(right["hashes"].iloc[0], dtype=np.int64)
             hashes = left["url_hash"].to_numpy(dtype=np.int64)
-            if mode == "cuckoo":
-                maybe = cuckoo_mod.contains(
-                    cuckoo_mod.from_bytes(right["bitset"].iloc[0]), hashes)
-            else:
-                bl = np.frombuffer(right["bitset"].iloc[0], dtype=np.uint8)
-                maybe = bloom_mod.contains(bl, hashes)
+            maybe = cuckoo_mod.contains(
+                cuckoo_mod.from_bytes(right["cuckoo"].iloc[0]), hashes)
             seen = np.zeros(len(left), dtype=bool)
             if maybe.any() and len(ex):
                 cand = hashes[maybe]
@@ -689,36 +679,27 @@ class FrontierEngine:
             F.xxhash64(F.coalesce(F.col("host"), F.lit(""))),
             F.lit(self.bloom_buckets)).cast("int")
 
-    def _note_seen(self, admitted: DataFrame,
-                   n_rows: int | None = None) -> None:
-        """Fold this round's admitted URLs into the URL-seen state.
+    def _note_seen(self, admitted: DataFrame, n_rows: int) -> None:
+        """Fold ``n_rows`` admitted URLs into the URL-seen state.
 
-        ``auto`` backend: persist just this round's key column as a new seen
-        part (materialized while the admitted rows are still cached, so the
-        part never recomputes through the dedup/politeness pipeline).
+        ``admitted`` must be lineage-stable: a filter over checkpointed
+        blocks (a round's admitted rows) or a scan of committed files (the
+        ``seen`` rounds a resumed crawl starts from). It carries
+        ``url_hash`` and ``host``.
 
-        ``bloom`` backend: deltas are built distributively (one row per host
-        bucket via applyInPandas: Bloom bitset + sorted hash array) so only
-        ``n_buckets`` delta rows — not per-URL rows — cross stages; they
-        merge into the executor-resident state table via a co-partitioned
-        cogroup (bitset OR + sorted-array union), and the new state
-        checkpoints eagerly. The driver never touches per-URL data — it
-        only swaps the DataFrame handle."""
-        if not self._prob_seen:
-            if n_rows is not None:
-                # fast path: ``admitted`` is already a filter over
-                # checkpointed blocks — its select is lineage-stable with
-                # zero extra jobs; the caller supplies the exact count.
-                self._seen_parts.append(admitted.select("url_hash"))
-                self._seen_count += n_rows
-            else:
-                # slow path (resume rebuild): checkpoint — NOT persist — so
-                # the part never recomputes through upstream lineage the
-                # caller may later unpersist/invalidate (quadratic).
-                part = _checkpoint_truncated(
-                    admitted.select("url_hash"))
-                self._seen_count += part.count()
-                self._seen_parts.append(part)
+        ``auto`` backend: append its key column as a new seen part — zero
+        extra jobs; ``n_rows`` keeps the broadcast decision exact.
+
+        ``cuckoo`` backend: deltas are built distributively (one row per
+        host bucket via applyInPandas: cuckoo table + sorted hash array) so
+        only ``n_buckets`` delta rows — not per-URL rows — cross stages;
+        they merge into the executor-resident state table via a
+        co-partitioned cogroup (sorted-array union + incremental insert),
+        and the new state checkpoints eagerly. The driver never touches
+        per-URL data — it only swaps the DataFrame handle."""
+        if self.seen_mode == "auto":
+            self._seen_parts.append(admitted.select("url_hash"))
+            self._seen_count += n_rows
             if len(self._seen_parts) >= self.seen_compact_parts:
                 # compaction: deep crawls would otherwise union one part
                 # per round — linear lineage and one scan-leaf per round.
@@ -727,20 +708,13 @@ class FrontierEngine:
                 self._seen_parts = [_checkpoint_truncated(
                     reduce(DataFrame.unionByName, self._seen_parts))]
             return
-        mode = self.seen_mode
 
         def build_delta(pdf: pd.DataFrame) -> pd.DataFrame:
             import numpy as np
             hashes = np.unique(pdf["url_hash"].to_numpy(dtype=np.int64))
-            if mode == "cuckoo":
-                blob = cuckoo_mod.build(hashes).tobytes()
-            else:
-                bs = bloom_mod.empty_bitset(BLOOM_BITS_PER_BUCKET)
-                bloom_mod.add(bs, hashes)
-                blob = bs.tobytes()
             return pd.DataFrame(
                 {"bucket": [int(pdf["bucket"].iloc[0])],
-                 "bitset": [blob],
+                 "cuckoo": [cuckoo_mod.build(hashes).tobytes()],
                  "hashes": [hashes.tobytes()]})
 
         deltas = (
@@ -762,26 +736,17 @@ class FrontierEngine:
                 for i in range(1, len(rows)):
                     ex = np.union1d(ex, np.frombuffer(
                         rows["hashes"].iloc[i], dtype=np.int64))
-                if mode == "cuckoo":
-                    # insert only the genuinely-new keys into row 0's
-                    # table; saturation (add_many -> None) rebuilds at
-                    # the next power-of-two size from the exact array,
-                    # so the filter can never report a false negative
-                    t = cuckoo_mod.from_bytes(rows["bitset"].iloc[0])
-                    t = cuckoo_mod.add_many(t, np.setdiff1d(ex, ex0))
-                    if t is None:
-                        t = cuckoo_mod.build(ex)
-                    blob = t.tobytes()
-                else:
-                    bs = np.frombuffer(rows["bitset"].iloc[0],
-                                       dtype=np.uint8).copy()
-                    for i in range(1, len(rows)):
-                        bs |= np.frombuffer(rows["bitset"].iloc[i],
-                                            dtype=np.uint8)
-                    blob = bs.tobytes()
+                # insert only the genuinely-new keys into row 0's table;
+                # saturation (add_many -> None) rebuilds at the next
+                # power-of-two size from the exact array, so the filter
+                # can never report a false negative
+                t = cuckoo_mod.from_bytes(rows["cuckoo"].iloc[0])
+                t = cuckoo_mod.add_many(t, np.setdiff1d(ex, ex0))
+                if t is None:
+                    t = cuckoo_mod.build(ex)
                 return pd.DataFrame({
                     "bucket": [int(rows["bucket"].iloc[0])],
-                    "bitset": [blob], "hashes": [ex.tobytes()]})
+                    "cuckoo": [t.tobytes()], "hashes": [ex.tobytes()]})
 
             new_state = (self._seen_state.groupBy("bucket")
                          .cogroup(deltas.groupBy("bucket"))
@@ -1069,12 +1034,17 @@ class FrontierEngine:
         """Seed → extract → follow recursion with URL-seen dedup, robots,
         politeness and DFS-priority admission. Records close per page (no
         cross-page record trees), so nothing is ever collected to the
-        driver except per-round counts and bucket-sized Bloom deltas.
+        driver except per-round counts and bucket-sized cuckoo deltas.
 
-        Resume: pass ``resume_frontier`` (the last committed frontier round)
-        and ``start_round``; with a state TableIO attached, the URL-seen set
-        (exact + Bloom) is rebuilt from the committed ``seen`` table so the
-        resumed crawl never re-visits.
+        State: with a TableIO attached, round k commits ``seen``, then
+        ``records``, then ``frontier``; round k exists once ``frontier``
+        round k is in its manifest. Resume: pass ``resume_frontier`` (that
+        round, ``state.read_round("frontier", k)``) and ``start_round=k+1``.
+        The URL-seen set is rebuilt from ``seen`` rounds ≤ k only, so the
+        ``seen``/``records`` commits of a round that died mid-way are inert;
+        the resumed run re-commits over them. The returned records are the
+        committed ``records`` rounds up to the last round this run
+        committed.
 
         Returns (records_df(url, depth, value_json), visit_rounds) where
         visit_rounds is the per-round admitted visit log metadata."""
@@ -1083,11 +1053,12 @@ class FrontierEngine:
         if resume_frontier is not None:
             frontier = resume_frontier.select(*_FRONTIER_COLS)
             if self.dedup and self.state is not None:
-                prior = self.state.read_all("seen")
+                # seen table persists (url_hash, host): host keys the
+                # URL-seen bucket, so rebuild must bucket identically
+                prior = self.state.read_all("seen",
+                                            max_round=start_round - 1)
                 if prior is not None:
-                    # seen table persists (url_hash, host): host keys the
-                    # URL-seen bucket, so rebuild must bucket identically
-                    self._note_seen(prior.select("url_hash", "host"))
+                    self._note_seen(prior, prior.count())
         else:
             frontier = _fold(self._url_prep, seed_frontier(spark, seed_urls))
 
@@ -1147,7 +1118,7 @@ class FrontierEngine:
 
                 t0 = time.perf_counter()
                 if self.dedup:
-                    self._note_seen(admitted, n_rows=n_admitted)
+                    self._note_seen(admitted, n_admitted)
                     if self.state is not None:
                         # persist the round's admitted ids so a resumed crawl
                         # rebuilds the URL-seen buckets (north rule: resumable)
@@ -1202,13 +1173,11 @@ class FrontierEngine:
                     conts = conts.unionByName(deferred.select(*_FRONTIER_COLS))
 
                 if self.state is not None:
-                    # atomic round commit — resume point (north rule)
                     self.state.commit_round(
                         "records", round_no, round_records,
                         meta={"admitted": n_admitted})
+                    # the round's commit point (north rule: resumable)
                     self.state.commit_round("frontier", round_no, conts)
-                    conts = self.state.read_round("frontier", round_no)
-                    records = None  # read back from state at the end
                 else:
                     records = (round_records if records is None
                                else records.unionByName(round_records))
@@ -1237,7 +1206,7 @@ class FrontierEngine:
                                str(default_shuffle))
         self._flush_metrics()
         if self.state is not None:
-            records = self.state.read_all("records")
+            records = self.state.read_all("records", max_round=round_no - 1)
             if records is not None:
                 records = records.select("url", "depth", "value_json")
         if records is None:

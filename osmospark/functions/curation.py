@@ -900,7 +900,10 @@ def mixture_plan(documents: DataFrame, weights: DataFrame,
     as its own row the same way.
     """
     toks = F.size(F.split(F.trim(F.col(text_col)), r"\s+"))
-    toks = F.when(F.length(F.trim(F.col(text_col))) == 0, F.lit(0)) \
+    # NULL text counts 0 tokens on every config (size(split(NULL)) is -1
+    # under spark.sql.legacy.sizeOfNull), so an all-NULL domain reports 0
+    toks = F.when(F.col(text_col).isNull(), F.lit(0)) \
+            .when(F.length(F.trim(F.col(text_col))) == 0, F.lit(0)) \
             .otherwise(toks)
     avail = (documents
              .groupBy(F.col(domain_col).alias("domain"))

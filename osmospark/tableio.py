@@ -15,10 +15,18 @@ TableIO provides one API with two backends:
   sandbox, which has no Iceberg jar): each round writes to a staged
   directory ``<table>/_staging/round=<k>-<nonce>`` then atomically
   installs it by renaming to ``<table>/round=<k>`` and rewriting
-  ``<table>/_manifest.json`` (the commit point). A crashed round leaves
-  only staging garbage; resume reads the last manifest. This implements
-  the same commit contract (atomic install, monotone committed_round,
-  per-round metadata) Iceberg snapshots give.
+  ``<table>/_manifest.json``. A crash inside one table's commit leaves
+  only staging garbage. This implements the same per-table commit
+  contract (atomic install, monotone committed_round, per-round metadata)
+  Iceberg snapshots give.
+
+Neither backend is atomic ACROSS tables, so a writer that commits several
+tables per round names one of them the round's commit point and reads the
+others through ``read_all(table, max_round=k)``, where k is the commit
+point's last round: the crawl engine commits ``seen``, ``records``, then
+``frontier``, and round k exists once ``frontier`` round k is in its
+manifest. A ``seen`` or ``records`` round beyond that is inert — readers
+never look past k, and the resumed run re-commits over it.
 
 Both backends keep the driver-side ``_manifest.json`` as round
 bookkeeping (rounds list, committed_round, per-round meta); under
@@ -180,14 +188,21 @@ class TableIO:
         return self.spark.read.parquet(
             os.path.join(self.root, table, f"round={round_no}"))
 
-    def read_all(self, table: str):
+    def read_all(self, table: str, max_round: int | None = None):
+        """Every committed round of ``table`` — only rounds ≤ ``max_round``
+        when given — or None when there is none."""
         if self.use_iceberg:
             if not self._iceberg_table_exists(self._qualified(table)):
                 return None
-            return self.spark.table(self._qualified(table)).drop("round")
+            from pyspark.sql import functions as F
+            df = self.spark.table(self._qualified(table))
+            if max_round is not None:
+                df = df.filter(F.col("round") <= int(max_round))
+            return df.drop("round")
         manifest = self.manifest(table)
         paths = [os.path.join(self.root, table, f"round={r}")
-                 for r in manifest["rounds"]]
+                 for r in manifest["rounds"]
+                 if max_round is None or r <= max_round]
         if not paths:
             return None
         return self.spark.read.parquet(*paths)

@@ -54,11 +54,11 @@ def parse_args(argv):
     p.add_argument("--concurrency", type=int, default=5)
     p.add_argument("--no-dedup", action="store_true")
     p.add_argument("--seen-mode", default="auto",
-                   choices=["auto", "bloom", "cuckoo"],
-                   help="URL-seen backend: exact anti-join, partitioned "
-                        "Bloom, or partitioned cuckoo filter")
+                   choices=["auto", "cuckoo"],
+                   help="URL-seen backend: exact anti-join or partitioned "
+                        "cuckoo filter")
     p.add_argument("--seen-buckets", type=int, default=32,
-                   help="host buckets for the bloom/cuckoo state table")
+                   help="host buckets for the cuckoo state table")
     p.add_argument("--robots", default=None,
                    help="parquet path of (host, robots_txt); compiled to "
                         "RFC 9309 rules + crawl-delay budgets")

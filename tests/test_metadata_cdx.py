@@ -162,6 +162,19 @@ def test_mixture_plan_targets_and_epochs(spark):
     assert got[None]["epochs_permille"] == 0
 
 
+def test_mixture_plan_all_null_text_domain_has_zero_tokens(spark):
+    docs = spark.createDataFrame(
+        [(0, None, "nul"), (1, None, "nul"), (2, "a b", "web")],
+        "doc_id long, text string, source string")
+    weights = spark.createDataFrame([("nul", 500), ("web", 500)],
+                                    "source string, weight_permille long")
+    got = {r["domain"]: r for r in mixture_plan(docs, weights, 100).collect()}
+    assert got["nul"]["n_docs"] == 2
+    assert got["nul"]["avail_tokens"] == 0          # not NULL
+    assert got["nul"]["epochs_permille"] == 0
+    assert got["web"]["avail_tokens"] == 2
+
+
 def test_mixture_plan_zero_avail_no_division_error(spark):
     docs = spark.createDataFrame([(0, "", "e")],
                                  "doc_id long, text string, source string")
@@ -470,6 +483,37 @@ def test_meta_robots_space_separated_tokens(spark):
     # nofollow keeps C out of the frontier
     assert [r.url for r in recs.collect()] == [f"{H}/A"]
     assert [m["admitted"] for m in meta] == [1, 1]
+
+
+@pytest.mark.parametrize("respect_meta_robots", [False, True])
+def test_follow_selector_yielding_text_nodes_emits_no_conts(
+        respect_meta_robots):
+    """A follow selector that selects text nodes (``a/node()``) has no
+    href to follow: the crawl kernel emits no cont rows for them — even
+    when the text looks like a URL and its anchor is rel=nofollow, so
+    the per-anchor nofollow check is never bypassed. The kernel runs on
+    a pandas batch; no Spark session."""
+    import pandas as pd
+    from osmospark.extract import make_crawl_udf
+    from osmospark.html import compile_selector
+    from osmospark.html.parser import TextNode
+    from osmospark.interpreter import build_document
+
+    url = "http://txt.test/"
+    html = (b'<html><body><a href="/x">http://txt.test/y</a>'
+            b'<a rel="nofollow" href="/z">http://txt.test/w</a>'
+            b'</body></html>')
+    doc = build_document(html.decode(), url)
+    nodes = compile_selector("a/node()").find(doc, relative=True)
+    assert len(nodes) == 2 and all(isinstance(n, TextNode) for n in nodes)
+    batch = pd.DataFrame({"url": [url], "url_hash": [1], "html": [html],
+                          "depth": [0], "referer": [None],
+                          "host": ["txt.test"]})
+    udf = make_crawl_udf(None, "a/node()",
+                         respect_meta_robots=respect_meta_robots)
+    out = pd.concat(list(udf(iter([batch]))), ignore_index=True)
+    assert "cont" not in set(out["row_kind"])
+    assert out.loc[out["row_kind"] == "metric", "parsed"].tolist() == [1]
 
 
 # -------------------------------------- property pins + full-loop compose

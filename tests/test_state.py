@@ -110,6 +110,9 @@ def test_tableio_atomic_commit_and_resume(spark, tmp_path):
     assert io.last_round("frontier") == 1
     assert io.read_round("frontier", 1).count() == 3
     assert io.read_all("frontier").count() == 8
+    # a reader bounded by another table's commit point skips later rounds
+    assert io.read_all("frontier", max_round=0).count() == 5
+    assert io.read_all("frontier", max_round=-1) is None
     # resume view: a fresh TableIO over the same dir sees committed state
     io2 = TableIO(str(tmp_path), spark)
     assert io2.last_round("frontier") == 1
@@ -207,7 +210,7 @@ print("PHASE1_OK")
 """
 
 
-@pytest.mark.parametrize("seen_mode", ["auto", "bloom", "cuckoo"])
+@pytest.mark.parametrize("seen_mode", ["auto", "cuckoo"])
 def test_crawl_survives_total_executor_state_loss(spark, tmp_path,
                                                  seen_mode):
     """Lost-executor recovery (north rule: resumable from checkpoint):
@@ -292,33 +295,6 @@ def test_metrics_commit_to_state_table_not_driver(spark, tmp_path):
     assert sum(r.fetched for r in eng2.metrics.collect()) == fetched
 
 
-def test_bloom_mode_matches_auto_and_keeps_state_off_driver(spark):
-    """seen_mode='bloom': the URL-seen structure lives in an
-    executor-resident state DataFrame of (bucket, bitset, hashes) rows —
-    the driver holds ONLY the handle, no per-URL data — and the visit set
-    is identical to auto (exact anti-join) mode."""
-    from osmospark.corpus import synth_corpus_df, synth_seed_urls
-    from osmospark.frontier import FrontierEngine
-
-    pages = synth_corpus_df(spark, 400, 4, weight=1).cache()
-    pages.count()
-    seeds = synth_seed_urls(4)
-    auto = FrontierEngine(spark, pages, dedup=True)
-    rec_a, _ = auto.run_crawl(seeds, "li > a", extract_spec=None,
-                              max_depth=4)
-    blm = FrontierEngine(spark, pages, dedup=True, seen_mode="bloom",
-                         bloom_buckets=8)
-    rec_b, _ = blm.run_crawl(seeds, "li > a", extract_spec=None,
-                             max_depth=4)
-    urls_a = {r.url for r in rec_a.select("url").collect()}
-    urls_b = {r.url for r in rec_b.select("url").collect()}
-    assert urls_a == urls_b and len(urls_a) > 10
-    # no per-URL state structure on the driver (the round-1 weakness):
-    assert not hasattr(blm, "_bloom") and not hasattr(blm, "_exact")
-    state_rows = blm._seen_state.count()
-    assert 0 < state_rows <= 8  # one row per host bucket, nothing else
-
-
 def test_seen_part_compaction_bounds_parts_and_preserves_visits(spark):
     """auto mode: per-round seen parts compact every K rounds so deep
     crawls never accumulate one union leaf per round."""
@@ -339,44 +315,92 @@ def test_seen_part_compaction_bounds_parts_and_preserves_visits(spark):
     assert len(v1) == len(v2)
 
 
-@pytest.mark.parametrize("seen_mode", ["auto", "bloom", "cuckoo"])
-def test_crawl_resume_matches_one_shot(spark, tmp_path, seen_mode):
-    """North rule: any round is resumable. A crawl interrupted after k
-    rounds and resumed from the committed frontier + seen state must visit
-    EXACTLY the set a one-shot crawl visits (URL-seen rebuild buckets
-    identically; within-round dedup picks the deterministic winner).
-    Runs under both seen backends (exact anti-join and the partitioned
-    Bloom+exact state table)."""
+_RESUME_SPEC = {"payload": "div"}
+
+
+@pytest.fixture(scope="module")
+def one_shot_crawl(spark):
+    """Pages, seeds and the uninterrupted 5-round crawl's sorted record
+    urls per seen backend — computed once per backend, shared by every
+    stop point of the resume test."""
     from osmospark.corpus import synth_corpus_df, synth_seed_urls
+    from osmospark.frontier import FrontierEngine
+
+    pages = synth_corpus_df(spark, 300, 4, weight=1).cache()
+    pages.count()
+    seeds = synth_seed_urls(4)
+    runs = {}
+
+    def get(seen_mode):
+        if seen_mode not in runs:
+            eng = FrontierEngine(spark, pages, dedup=True, politeness=True,
+                                 seen_mode=seen_mode)
+            rec, _ = eng.run_crawl(seeds, "li > a",
+                                   extract_spec=_RESUME_SPEC, max_depth=6,
+                                   max_rounds=5)
+            runs[seen_mode] = sorted(r.url for r in
+                                     rec.select("url").collect())
+        return pages, seeds, runs[seen_mode]
+
+    yield get
+    pages.unpersist()
+
+
+class _InjectedFault(RuntimeError):
+    pass
+
+
+@pytest.mark.parametrize("seen_mode,stop", [
+    ("auto", "pause"), ("cuckoo", "pause"),
+    ("auto", "records"), ("auto", "frontier"),
+    ("cuckoo", "records"), ("cuckoo", "frontier"),
+], ids=["auto", "cuckoo", "auto-records", "auto-frontier",
+        "cuckoo-records", "cuckoo-frontier"])
+def test_crawl_resume_matches_one_shot(spark, tmp_path, monkeypatch,
+                                       one_shot_crawl, seen_mode, stop):
+    """North rule: any round is resumable. The first run stops either at
+    a clean pause after round 1, or with a fault raised from round 1's
+    ``records`` or ``frontier`` commit — after that round's ``seen``
+    commit, so the state tables stand at different rounds. Resumed from
+    the last committed ``frontier`` round, the crawl must visit EXACTLY
+    the one-shot crawl's pages and write each record once, under both
+    seen backends."""
     from osmospark.frontier import FrontierEngine
     from osmospark.tableio import TableIO
 
-    pages = synth_corpus_df(spark, 800, 6, weight=1).cache()
-    pages.count()
-    seeds = synth_seed_urls(6)
-    spec = {"payload": "div"}
-
+    pages, seeds, one_shot = one_shot_crawl(seen_mode)
     io = TableIO(str(tmp_path / "s"), spark)
     eng = FrontierEngine(spark, pages, state=io, dedup=True, politeness=True,
                          seen_mode=seen_mode)
-    eng.run_crawl(seeds, "li > a", extract_spec=spec,
-                  max_depth=6, max_rounds=2)
+    if stop == "pause":
+        eng.run_crawl(seeds, "li > a", extract_spec=_RESUME_SPEC,
+                      max_depth=6, max_rounds=2)
+    else:
+        commit = TableIO.commit_round
+
+        def faulty(self, table, round_no, df, meta=None):
+            if (table, round_no) == (stop, 1):
+                raise _InjectedFault(f"{table} commit of round {round_no}")
+            return commit(self, table, round_no, df, meta)
+
+        monkeypatch.setattr(TableIO, "commit_round", faulty)
+        with pytest.raises(_InjectedFault):
+            eng.run_crawl(seeds, "li > a", extract_spec=_RESUME_SPEC,
+                          max_depth=6, max_rounds=5)
+        monkeypatch.undo()
 
     io2 = TableIO(str(tmp_path / "s"), spark)
     last = io2.last_round("frontier")
+    assert last == (1 if stop == "pause" else 0)
     eng2 = FrontierEngine(spark, pages, state=io2, dedup=True,
                           politeness=True, seen_mode=seen_mode)
     rec2, _ = eng2.run_crawl(
-        [], "li > a", extract_spec=spec, max_depth=6, max_rounds=2,
-        resume_frontier=io2.read_round("frontier", last),
+        [], "li > a", extract_spec=_RESUME_SPEC, max_depth=6,
+        max_rounds=4 - last, resume_frontier=io2.read_round("frontier", last),
         start_round=last + 1)
-
-    eng3 = FrontierEngine(spark, pages, dedup=True, politeness=True,
-                          seen_mode=seen_mode)
-    rec3, _ = eng3.run_crawl(seeds, "li > a", extract_spec=spec,
-                             max_depth=6, max_rounds=4)
-    resumed = {r.url for r in rec2.select("url").collect()}
-    one_shot = {r.url for r in rec3.select("url").collect()}
+    resumed = sorted(r.url for r in rec2.select("url").collect())
+    assert len(one_shot) > 20
+    # equal sorted lists: the same visit set AND no duplicate record rows
     assert resumed == one_shot
 
 
@@ -419,8 +443,11 @@ def test_cuckoo_filter_grows_on_saturation():
 
 
 def test_cuckoo_mode_matches_auto_and_keeps_state_off_driver(spark):
-    """seen_mode='cuckoo': same partitioned executor-resident state rows
-    as bloom mode, same visit set as the exact anti-join backend."""
+    """seen_mode='cuckoo': the URL-seen structure lives in an
+    executor-resident state DataFrame of (bucket, cuckoo, hashes) rows —
+    the driver holds ONLY the handle, no per-URL data — and the visit set
+    is identical to auto (exact anti-join) mode. 'auto' and 'cuckoo' are
+    the only backends."""
     from osmospark.corpus import synth_corpus_df, synth_seed_urls
     from osmospark.frontier import FrontierEngine
 
@@ -437,8 +464,12 @@ def test_cuckoo_mode_matches_auto_and_keeps_state_off_driver(spark):
     urls_a = {r.url for r in rec_a.select("url").collect()}
     urls_c = {r.url for r in rec_c.select("url").collect()}
     assert urls_a == urls_c and len(urls_a) > 10
+    # no per-URL state structure on the driver (the round-1 weakness):
+    assert not hasattr(ck, "_bloom") and not hasattr(ck, "_exact")
     state_rows = ck._seen_state.count()
-    assert 0 < state_rows <= 8
+    assert 0 < state_rows <= 8  # one row per host bucket, nothing else
+    with pytest.raises(ValueError, match="seen_mode"):
+        FrontierEngine(spark, pages, dedup=True, seen_mode="bloom")
 
 
 # ----------------------------------------------------------------------
