@@ -4,6 +4,7 @@ Per round (SURVEY §3.1 lifecycle):
 
     frontier → admission stages → localCheckpoint → admitted / deferred
              → join pages corpus on url_hash (broadcast when small, AQE else)
+             → coalesce to the round's size (~200 pages per task)
              → extraction UDF (mapInPandas, page-scope chain execution)
              → records / child values / open records / next frontier
              → round commit (TableIO): seen, records, then frontier
@@ -91,6 +92,10 @@ _STATE_SCHEMA = "bucket int, cuckoo binary, hashes binary"
 # holds at most this many keys, shuffled beyond
 SEEN_BROADCAST_KEYS = 4_000_000
 
+# pages per extraction task: a round's fetch-joined frame is coalesced to
+# ceil(n / EXTRACT_PAGES_PER_TASK) partitions before the extraction UDF
+EXTRACT_PAGES_PER_TASK = 200
+
 
 def _checkpoint_truncated(df: DataFrame) -> DataFrame:
     """Eager localCheckpoint that also RESETS Catalyst's size statistics.
@@ -122,6 +127,16 @@ def _checkpoint_truncated(df: DataFrame) -> DataFrame:
         return DataFrame(fresh, spark)
     except Exception:  # pragma: no cover — py4j bridge unavailable
         return cp
+
+
+def _extract_width(joined: DataFrame, n: int) -> DataFrame:
+    """Narrow the fetch-joined frame of an ``n``-row round to
+    ``max(1, ceil(n / EXTRACT_PAGES_PER_TASK))`` partitions. ``coalesce``
+    is narrow, so the corpus scan, the broadcast probe and the UDF run in
+    the same few tasks and no page bytes move; it is a no-op when the
+    frame already has no more partitions, so large rounds keep full
+    width."""
+    return joined.coalesce(max(1, -(-n // EXTRACT_PAGES_PER_TASK)))
 
 
 def _frontier_df(spark: SparkSession, rows: list[dict]) -> DataFrame:
@@ -842,7 +857,8 @@ class FrontierEngine:
                 self.state.commit_round("frontier", round_no, frontier,
                                         meta={"size": n_frontier})
             out = _checkpoint_truncated(
-                self._fetch_join(frontier, n_frontier)
+                _extract_width(self._fetch_join(frontier, n_frontier),
+                               n_frontier)
                 .mapInPandas(make_extract_udf(chains, round_no), OUT_SCHEMA))
             out_parts.append(out)
             self._pending_metrics.append(
@@ -1005,7 +1021,8 @@ class FrontierEngine:
         at scale, pass the round's admitted frontier through the same
         pipeline instead of a driver-side list."""
         frontier = seed_frontier(self.spark, urls)
-        joined = self._fetch_join(frontier, len(urls))
+        joined = _extract_width(self._fetch_join(frontier, len(urls)),
+                                len(urls))
         out = joined.select("url", "url_hash", "host", "depth", "referer",
                             "html", "page_status", "content_type") \
             .mapInPandas(make_crawl_udf(extract_spec, None), OUT_SCHEMA)
@@ -1088,6 +1105,13 @@ class FrontierEngine:
         # with AQE off the engine does the same job itself, sizing
         # spark.sql.shuffle.partitions per round from the frontier size
         # (PLANS §8).
+        #
+        # The extract stage is sized the same way: the fetch join keeps the
+        # corpus's partitioning, which would launch one Python UDF task per
+        # corpus partition however few URLs the round admitted, and small
+        # UDF batches are dominated by per-task overhead. _extract_width
+        # coalesces the joined frame to ~EXTRACT_PAGES_PER_TASK pages per
+        # task; large rounds keep full width.
         default_shuffle = None
         if spark.conf.get("spark.sql.adaptive.enabled").lower() != "true":
             default_shuffle = int(
@@ -1146,9 +1170,9 @@ class FrontierEngine:
                         .withColumn("round", F.lit(round_no)))
                 else:
                     joined = self._fetch_join(admitted, n_admitted)
-                out = joined.select("url", "url_hash", "host", "depth",
-                                    "referer", "html", "page_status",
-                                    "content_type") \
+                out = _extract_width(joined, n_admitted) \
+                    .select("url", "url_hash", "host", "depth", "referer",
+                            "html", "page_status", "content_type") \
                     .mapInPandas(crawl_udf, OUT_SCHEMA)
                 # ONE materialization per round: everything downstream (records,
                 # next frontier, metrics) reads the checkpointed blocks

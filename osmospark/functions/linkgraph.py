@@ -261,8 +261,10 @@ def hits(edges: DataFrame, iters: int = 2, unit: int = RANK_UNIT,
     Scale shape per iteration: two edge-keyed join+aggregate passes
     (edges ⋈ hubs on src → groupBy(dst); edges ⋈ auths on dst →
     groupBy(src)) — the edge table shuffles on its natural keys, rank
-    frames are nodes-sized, and the max is a 1-row broadcast scalar.
-    ``checkpoint_every`` flattens lineage as in ``link_rank``.
+    frames are nodes-sized, and the max is a driver-side scalar (one
+    1-row aggregate job per half-iteration), so the plan grows linearly
+    with ``iters``. ``checkpoint_every`` flattens lineage as in
+    ``link_rank``.
     """
     e = edges.select(F.col("src").cast("bigint").alias("src"),
                      F.col("dst").cast("bigint").alias("dst"))
@@ -272,11 +274,13 @@ def hits(edges: DataFrame, iters: int = 2, unit: int = RANK_UNIT,
     auth = nodes.select("id", F.lit(0).cast("bigint").alias("a"))
 
     def _norm(raw: DataFrame, key: str, col: str, out: str) -> DataFrame:
-        mx = raw.agg(F.greatest(F.max(col), F.lit(1)).alias("_m"))
+        # the max is fetched as a one-row scalar and divided by as a
+        # literal: a cross join to raw's own aggregate would read raw
+        # twice, and the plan would grow 4x per iteration
+        mx = raw.agg(F.greatest(F.max(col), F.lit(1))).first()[0]
         return (nodes.join(raw.withColumnRenamed(key, "id"), "id", "left")
-                .crossJoin(F.broadcast(mx))
                 .select("id", F.expr(
-                    f"(coalesce({col}, 0L) * {unit}) div _m")
+                    f"(coalesce({col}, 0L) * {unit}) div {mx}L")
                     .cast("bigint").alias(out)))
 
     for i in range(iters):

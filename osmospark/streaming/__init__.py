@@ -95,18 +95,19 @@ def stream_unseen_links_stateful(out_stream: DataFrame,
                                  n_buckets: int = 16,
                                  bits_per_bucket: int = 1 << 17) -> DataFrame:
     """Custom stateful streaming operator (``applyInPandasWithState``):
-    the streaming analogue of the batch engine's partitioned Bloom
-    URL-seen state. Links key by host bucket; each group's state is that
-    bucket's Bloom bitset, a bounded binary blob in the Spark state store
-    (bits/8 bytes per bucket FOREVER, vs ``dropDuplicates`` state that
-    grows with the seen set). Emits each link the first time its bucket's
-    filter hasn't seen it.
+    a partitioned Bloom URL-seen state. Links key by host bucket; each
+    group's state is that bucket's Bloom bitset, a bounded binary blob in
+    the Spark state store (bits/8 bytes per bucket FOREVER, vs
+    ``dropDuplicates`` state that grows with the seen set). Emits each
+    link the first time its bucket's filter hasn't seen it.
 
     Probabilistic by design: Bloom false positives drop ~FPR of
     genuinely-new URLs — size ``bits_per_bucket`` for the expected keys
     per bucket (10 bits/key ≈ 1% FPR). The exact-state alternative is
-    ``stream_outlinks`` (dropDuplicates); the batch engine uses the same
-    two-tier design (Bloom prefilter + exact backstop)."""
+    ``stream_outlinks`` (dropDuplicates). The batch engine has no Bloom
+    backend: it uses the exact anti-join (``seen_mode="auto"``) or a
+    cuckoo prefilter with an exact sorted-array backstop
+    (``seen_mode="cuckoo"``)."""
     conts = (out_stream.filter(F.col("row_kind") == "cont")
              .select("url", F.xxhash64("url").alias("url_hash"), "host",
                      F.col("depth").cast("int").alias("depth"), "referer"))

@@ -213,41 +213,3 @@ class TableIO:
 
 def _norm_rounds(manifest: dict):
     return [{"round": r} for r in manifest.get("rounds", [])]
-
-
-def write_bucketed(df, table: str, bucket_col: str,
-                   n_buckets: int = 64, sort_col: str | None = None,
-                   mode: str = "overwrite") -> None:
-    """Persist ``df`` as a BUCKETED catalog table: rows are
-    hash-partitioned into ``n_buckets`` files per write task by
-    ``bucket_col`` (optionally sorted inside each bucket).
-
-    Why this exists (the 100-TB co-located-join story): two tables
-    bucketed on the same key with the same bucket count equi-join with
-    ZERO Exchange — Spark proves both sides' output partitioning
-    matches the join keys from the bucket spec, so the corpus never
-    reshuffles for the join (``test_state.py`` asserts the executed
-    plan is exchange-free vs 2 exchanges unbucketed). For a crawl
-    pipeline this is how the pages table joins per-url state (ranks,
-    features, seen flags) round after round without paying O(corpus)
-    shuffle each time: bucket both by url_hash ONCE at write.
-
-    Requires ``saveAsTable`` (bucket metadata lives in the catalog; the
-    sandbox's in-memory catalog is session-scoped — at cluster scale the
-    same call against a real metastore or an Iceberg catalog with a
-    ``bucket(n, col)`` partition transform is durable)."""
-    w = df.write.mode(mode).bucketBy(n_buckets, bucket_col)
-    if sort_col is not None:
-        w = w.sortBy(sort_col)
-    w.format("parquet").saveAsTable(table)
-
-
-def bucketed_join(spark, left_table: str, right_table: str,
-                  on: str, how: str = "inner"):
-    """Equi-join two co-bucketed catalog tables on their bucket key.
-    With matching bucket specs the plan contains no Exchange on either
-    side; the merge hint pins a sort-merge join so the co-location (not
-    a broadcast small-side fallback) is what is exercised."""
-    left = spark.table(left_table)
-    right = spark.table(right_table)
-    return left.hint("merge").join(right, on, how)

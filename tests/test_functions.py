@@ -1337,13 +1337,24 @@ def test_hits_distinguishes_hub_quality(spark):
 
 
 def test_hits_checkpoint_invariant(spark):
+    """Checkpointing does not change the ranks, and lineage grows
+    linearly: each half-iteration reads the previous rank frame once, so
+    the analyzed plan at iters=4 is at most 2.5x the plan at iters=2 (a
+    max-normalizer joined back to its own input grows it 4x per
+    iteration)."""
     from osmospark.functions.linkgraph import hits
+
+    def plan_lines(df):
+        return len(df._jdf.queryExecution().analyzed().toString()
+                   .splitlines())
 
     edges = spark.createDataFrame(
         [(i, (i * i + 1) % 7) for i in range(7)]
         + [(i, (i + 1) % 7) for i in range(7)], "src long, dst long")
-    plain = [tuple(r) for r in hits(edges, iters=4,
-                                    checkpoint_every=0).collect()]
+    plain_df = hits(edges, iters=4, checkpoint_every=0)
+    assert plan_lines(plain_df) <= 2.5 * plan_lines(
+        hits(edges, iters=2, checkpoint_every=0))
+    plain = [tuple(r) for r in plain_df.collect()]
     ck = [tuple(r) for r in hits(edges, iters=4,
                                  checkpoint_every=2).collect()]
     assert plain == ck

@@ -92,6 +92,42 @@ def test_crawl_mode_dedup_and_depth(spark):
     assert sorted(urls) == sorted(r.url for r in records2.collect())
 
 
+def test_extract_stage_width_follows_round_size(spark, fixture_pages_df,
+                                                monkeypatch):
+    """A round that admits n URLs runs its extraction UDF in
+    min(P, ceil(n / EXTRACT_PAGES_PER_TASK)) tasks, not one task per
+    corpus partition: here P = 4 and every round admits fewer than 200
+    URLs, in crawl mode and in chain mode."""
+    from osmospark.frontier import engine as eng_mod
+
+    widths = []
+    real = eng_mod._checkpoint_truncated
+
+    def spy(df):
+        if "row_kind" in df.columns:       # the round's extract output
+            widths.append(df.rdd.getNumPartitions())
+        return real(df)
+
+    monkeypatch.setattr(eng_mod, "_checkpoint_truncated", spy)
+    pages = synth_corpus(n_urls=40, n_hosts=2)
+    pages_df = spark.createDataFrame(
+        pages_rows(pages),
+        "url string, warc_ts timestamp, html binary, text string, lang string"
+    ).repartition(4)
+    FrontierEngine(spark, pages_df, dedup=True).run_crawl(
+        seed_urls(pages), "li > a", max_depth=1)
+    n_crawl = len(widths)
+    FrontierEngine(spark, fixture_pages_df.repartition(4)).run_chain(
+        chain_nested_follow()).collect()
+    assert n_crawl == 2 and len(widths) > n_crawl
+    assert widths == [1] * len(widths)
+
+    # large rounds keep the joined frame's width
+    wide = spark.range(8).repartition(8)
+    assert eng_mod._extract_width(wide, 450).rdd.getNumPartitions() == 3
+    assert eng_mod._extract_width(wide, 5000).rdd.getNumPartitions() == 8
+
+
 def test_dedup_window_winner_order(spark):
     """The within-round winner (_dedup_round) keeps, per url, the
     highest-priority row by the admission order — depth DESC, then
